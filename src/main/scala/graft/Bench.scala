@@ -1,8 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-import java.util.concurrent.{Callable, Executors, ThreadFactory, TimeUnit, TimeoutException}
-
 /** Per-round benchmark: times each headline query (Q.bench == true) on
   * SPARK_GRAFT_SF_DIR. The complete cumulative JSON is checkpointed to
   * a file after EVERY query (an external timeout still leaves a
@@ -14,13 +12,10 @@ import java.util.concurrent.{Callable, Executors, ThreadFactory, TimeUnit, Timeo
   * `count()` would let Catalyst prune projections and undercount work.
   *
   * Robustness rules (each one bought with a failed round-1 bench):
-  *  - per-run wall-clock cap, enforced with `cancelJobGroup`: one
-  *    runaway query (or a host stall) can no longer eat the whole
-  *    window — it is recorded as a DNF at the cap and the suite moves on;
-  *  - `spark.catalog.clearCache()` after every query: operators cache
-  *    frames shared across self-join sides (correct within a query);
-  *    letting 60+ queries' caches accumulate in one JVM builds memory
-  *    pressure that compounds into multi-minute stalls;
+  *  - every run is capped and the cache cleared after every query,
+  *    both through [[Runner]]: a runaway query becomes a DNF at the cap
+  *    instead of eating the window, and 60+ queries' caches in one JVM
+  *    build memory pressure that compounds into multi-minute stalls;
   *  - best of two timed runs: one-off JIT/GC stalls otherwise get
   *    charged to an arbitrary query and swamp the signal;
   *  - adaptive third run when the two timed runs DISAGREE by more than
@@ -47,99 +42,21 @@ object Bench {
     */
   private val StallRatio = 1.5
 
-  private val pool = Executors.newCachedThreadPool(new ThreadFactory {
-    def newThread(r: Runnable) = {
-      val t = new Thread(r, "bench-runner"); t.setDaemon(true); t
+  /** One timed noop-sink execution of `q` through the shared [[Runner]]. */
+  private def timedRun(spark: SparkSession, q: Q, dir: String, capSec: Long): Runner.Result =
+    Runner.run(spark, q.name, capSec) {
+      q.run(spark, dir).write.format("noop").mode("overwrite").save()
     }
-  })
 
-  /** One timed execution's outcome: completed in `sec`, timed out at
-    * the cap (slow — a real DNF), or raised (broken — an analysis or
-    * runtime error, which must never masquerade as a timeout in the
-    * record: "slow" and "broken" need different responses).
+  /** The complete cumulative JSON record, checkpointed after every
+    * query so a crash mid-suite still leaves a complete-so-far record;
+    * stdout gets only the compact line (see [[compactLine]]). Subset
+    * (re-measurement) runs write to a SEPARATE file so an ad-hoc
+    * two-query timing never clobbers the committed full-suite record.
     */
-  private sealed trait RunResult
-  private final case class Ok(sec: Double) extends RunResult
-  private case object Dnf extends RunResult
-  private final case class Err(msg: String) extends RunResult
-
-  /** Timed-out runner threads that have not yet unwound. A cancelled
-    * run usually dies within seconds of `cancelJobGroup`, but one
-    * caught inside cache materialization can linger — and Spark's
-    * CacheManager↔CachedRDDBuilder lock order inverts between
-    * `clearCache` (CacheManager → builder) and `buildBuffers`'s
-    * `recacheByPlan` (builder → CacheManager), so clearing the cache
-    * while such a runner is mid-flight can DEADLOCK the driver
-    * (observed live: the sf1 sweep hung 23 min between queries until a
-    * jstack showed exactly this inversion). The main loop only clears
-    * the cache when this set is empty.
-    */
-  private val leaked =
-    new java.util.concurrent.ConcurrentLinkedQueue[(String, java.util.concurrent.atomic.AtomicBoolean)]
-
-  private def leakedRunners(): Seq[String] = {
-    leaked.removeIf((e: (String, java.util.concurrent.atomic.AtomicBoolean)) => e._2.get())
-    import scala.jdk.CollectionConverters._
-    leaked.asScala.map(_._1).toSeq
-  }
-
-  /** True when it is safe to `clearCache` (no timed-out runner still
-    * unwinding inside a cache build — see [[leaked]]).
-    */
-  private def safeToClearCache(): Boolean = leakedRunners().isEmpty
-
-  /** Runs one execution under a wall-clock cap; cancels the Spark jobs
-    * (not just the waiting thread) on timeout so executor slots free up.
-    */
-  private def runCapped(spark: SparkSession, q: Q, dir: String, capSec: Long): RunResult = {
-    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val fut = pool.submit(new Callable[Double] {
-      def call(): Double =
-        try {
-          spark.sparkContext.setJobGroup(q.name, q.name, interruptOnCancel = true)
-          val t0 = System.nanoTime()
-          q.run(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } finally finished.set(true)
-    })
-    try Ok(fut.get(capSec, TimeUnit.SECONDS))
-    catch {
-      case _: TimeoutException =>
-        spark.sparkContext.cancelJobGroup(q.name)
-        fut.cancel(true)
-        // grace period: cancelled jobs normally unwind the runner in
-        // seconds; if it lingers, record the leak so the main loop
-        // avoids the clearCache deadlock window
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!finished.get && System.nanoTime() < deadline) Thread.sleep(200)
-        if (!finished.get) {
-          leaked.add(q.name -> finished)
-          System.err.println(s"[bench] ${q.name}: runner still unwinding after cancel (leak tracked)")
-        }
-        System.err.println(s"[bench] ${q.name}: DNF (> ${capSec}s, jobs cancelled)")
-        Dnf
-      case e: Throwable =>
-        val cause = Option(e.getCause).getOrElse(e)
-        System.err.println(s"[bench] ${q.name}: $cause")
-        Err(s"${cause.getClass.getSimpleName}: ${Option(cause.getMessage).getOrElse("").linesIterator.take(1).mkString}")
-    }
-  }
-
-  /** The driver captures only the TAIL of stdout, which truncates the
-    * front of the (long) cumulative JSON line once ~90 queries are in
-    * it. The file copy is the complete, always-parseable record; stdout
-    * stays for the driver's legacy capture path.
-    */
-  // Subset (re-measurement) runs write to a SEPARATE file so an ad-hoc
-  // two-query timing never clobbers the committed full-suite record.
   @volatile private var OutFile = java.nio.file.Paths.get(
     sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_out.json"))
 
-  // The full cumulative JSON is FILE-only (checkpointed per query so a
-  // crash mid-suite still leaves a complete-so-far record); stdout gets
-  // only the compact summary line at suite end — even a single full
-  // line at suite end overflowed the driver's tail capture
-  // (BENCH_r{9..12} were all `parsed: null`, see [[compactLine]]).
   private def checkpoint(line: String): Unit =
     try
       java.nio.file.Files.write(OutFile, (line + "\n").getBytes("UTF-8"))
@@ -228,20 +145,6 @@ object Bench {
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runs,"dnf":$dnfs,"err":$errJson,"flaky":$flakyJson,"skipped":$skips,"sf":"$sfDir"}"""
   }
 
-  /** Every remaining unpartitioned window in the library sits on a
-    * provably bounded domain (distinct calendar months/days, a 15-row
-    * top-k result, k cluster rows, a broadcast dimension's lead()) —
-    * each site carries a waiver comment, and PlanSpec pins the one
-    * shape where an unpartitioned window over unbounded input WOULD be
-    * a hazard (q17). WindowExec's blanket warning is therefore noise in
-    * this codebase; silence that one logger, keep everything else at
-    * WARN.
-    */
-  private[graft] def muteBoundedWindowWarning(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
   def main(args: Array[String]): Unit = {
     // trailing query names → bench only that subset (re-measurement runs);
     // no args → the full headline suite, as the driver invokes it
@@ -265,7 +168,7 @@ object Bench {
     // [[Sessions.builder]] for each setting's rationale
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    muteBoundedWindowWarning()
+    Sessions.muteBoundedWindowWarning()
 
     // Suite-level wall-clock budget: even in the worst case (every
     // query twice at the per-run cap on a badly stalling host) the
@@ -283,8 +186,8 @@ object Bench {
     // most a quarter of the budget — timed runs have priority.
     queries.foreach { q =>
       if (remainingSec > budgetSec * 3 / 4) {
-        runCapped(spark, q, Sessions.warmupDir, WarmCapSec)
-        spark.catalog.clearCache()
+        timedRun(spark, q, Sessions.warmupDir, WarmCapSec)
+        Runner.clearCache(spark)
       }
     }
 
@@ -328,7 +231,7 @@ object Bench {
           case e: Exception =>
             System.err.println(s"[bench] prebuild $nm FAILED: ${e.getMessage.take(120)}")
         }
-        if (safeToClearCache()) spark.catalog.clearCache()
+        Runner.clearCache(spark)
       }
     }
 
@@ -351,10 +254,10 @@ object Bench {
         // an error is deterministic (same plan, same data) — record it
         // once and stop; only timeouts merit a second/third attempt
         while (attempts < nRuns && err.isEmpty) {
-          runCapped(spark, q, sfDir, cap) match {
-            case Ok(s)  => runs :+= s
-            case Dnf    => ()
-            case Err(m) => err = Some(m)
+          timedRun(spark, q, sfDir, cap) match {
+            case Runner.Ok(s)  => runs :+= s
+            case Runner.Dnf    => ()
+            case e: Runner.Err => err = Some(e.msg)
           }
           attempts += 1
         }
@@ -362,9 +265,9 @@ object Bench {
         // one of them hit a host stall — a third run decides which
         if (err.isEmpty && runs.size == 2 && runs.max > runs.min * StallRatio &&
             remainingSec > RunCapSec)
-          runCapped(spark, q, sfDir, cap) match {
-            case Ok(s) => runs :+= s
-            case _     => ()
+          timedRun(spark, q, sfDir, cap) match {
+            case Runner.Ok(s) => runs :+= s
+            case _            => ()
           }
         (err, runs) match {
           // a completed measurement still counts when a LATER run of
@@ -386,13 +289,7 @@ object Bench {
             dnf :+= q.name
             done :+= (q.name -> Vector(cap.toDouble)) // cap charged so totals stay comparable
         }
-        // caches are per-query scoped (self-join sharing); never let them
-        // accumulate across the suite — but NEVER clear while a
-        // timed-out runner may still be inside a cache build (the
-        // CacheManager↔CachedRDDBuilder deadlock, see [[leaked]])
-        if (safeToClearCache()) spark.catalog.clearCache()
-        else System.err.println(
-          s"[bench] clearCache skipped: runners still unwinding (${leakedRunners().mkString(", ")})")
+        Runner.clearCache(spark)
         checkpoint(jsonLine(sfDir, done, dnf, errs, flaky, skipped))
       }
     }

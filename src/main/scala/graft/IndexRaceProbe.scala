@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Two-real-JVM race evidence for [[IndexStore]]: each probe process
@@ -20,11 +19,7 @@ import org.apache.spark.sql.functions._
 object IndexRaceProbe {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.builder("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round evidence probe: runs each named query once
   * (noop sink) and prints how many Spark JOBS and STAGES it launched
@@ -14,7 +13,7 @@ object JobCount {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Bench.muteBoundedWindowWarning()
+    Sessions.muteBoundedWindowWarning()
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipelines.{AnalyticsService, ClusteringJob, EtlJob}
-import org.apache.spark.sql.SparkSession
 
 /** CLI dispatcher mirroring the reference's `main.py -t etl|clustering|dss`
   * (`/root/reference/main.py:11-26`).
@@ -12,16 +11,8 @@ object Main {
   def main(args: Array[String]): Unit = {
     val Array(task, srcDir, wh) = args.take(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-$task")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // test parquet files are single-digit-MB; split them so scans do not
-      // collapse to one task (amplified by explodes downstream)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // the engine config the bench times — see [[Sessions.builder]]
+    val spark = Sessions.builder(cpus).appName(s"graft-$task").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     task match {
       case "etl"        => EtlJob.run(spark, srcDir, wh)

@@ -19,8 +19,7 @@ import org.apache.spark.sql.DataFrame
   * sf10+ locally, and on a real cluster it caps nothing until the
   * frame drops under partitions×2 MB). Join-inflated estimates (unit
   * specs driving derived frames) hit the session cap and leave
-  * behavior unchanged — safe fallback. Override for A/Bs:
-  * `spark.graft.loop.parts`.
+  * behavior unchanged — safe fallback.
   *
   * The window mutates the SESSION conf around `body` and restores it:
   * exchanges planned inside but executed lazily after the window run
@@ -55,10 +54,7 @@ object Parts {
   private def withParts[T](s: org.apache.spark.sql.SparkSession, raw: BigInt)(body: => T): T = {
     val conf = s.conf
     val prev = conf.get("spark.sql.shuffle.partitions")
-    val n = conf.getOption("spark.graft.loop.parts").map(_.toInt)
-      .getOrElse(raw.min(BigInt(prev.toInt)).max(BigInt(1)).toInt)
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[parts] n=$n (prev=$prev)")
+    val n = raw.min(BigInt(prev.toInt)).max(BigInt(1)).toInt
     conf.set("spark.sql.shuffle.partitions", n.toString)
     try body finally conf.set("spark.sql.shuffle.partitions", prev)
   }

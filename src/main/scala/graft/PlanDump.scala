@@ -1,13 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` for named queries to files — the
   * optimization-round evidence trail (`plans/r{N}/<query>_<tag>.txt`).
   * Usage:
   *   tools/run_main.sh graft.PlanDump <outDir> <tag> q58_pca_variance ...
-  * Session configs mirror [[Bench]] (same master/shuffle-partition/
-  * split settings) so the dumped plan is the one the bench times; the
-  * data dir comes from SPARK_GRAFT_SF_DIR (default sf0.1) like Bench.
+  * The session is [[Sessions.builder]]'s, so the dumped plan is the
+  * one the bench times; the data dir comes from SPARK_GRAFT_SF_DIR
+  * (default sf0.1) like Bench.
   * Iterative operators that eagerly checkpoint during plan
   * construction execute those prefix jobs here — the dump is the final
   * action's plan, exactly what the timed noop sink runs.
@@ -22,7 +21,7 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Bench.muteBoundedWindowWarning()
+    Sessions.muteBoundedWindowWarning()
     for (q <- args.drop(2)) {
       val df = SparkEntry.queries(q)(spark, sfDir)
       val txt = df.queryExecution.explainString(

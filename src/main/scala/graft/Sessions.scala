@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** ONE session construction shared by every harness main (Bench,
-  * Verify, JobCount, PlanDump, PlanProbe) so an engine-level config can
-  * never drift between the binary the driver grades and the probes that
-  * explain it — r17's `codegen.maxFields` landed in Bench/Verify but
-  * not PlanProbe, whose WholeStageCodegen wrapping then differed from
-  * the plans Bench actually times past 100 fields (ADVICE r17).
+/** ONE session construction shared by the engine mains (Main's
+  * etl/clustering/report CLI, Bench, Verify, JobCount, PlanDump,
+  * PlanProbe, IndexRaceProbe) so an engine-level config can never drift
+  * between the graded and timed binary and the probes that explain it
+  * — r17's `codegen.maxFields` landed in Bench/Verify but not
+  * PlanProbe, whose WholeStageCodegen wrapping then differed from the
+  * plans Bench actually times past 100 fields (ADVICE r17).
   */
 object Sessions {
 
@@ -32,16 +33,24 @@ object Sessions {
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE: measurement instrument ONLY — decouples the
-      // shuffle-partition count from the core count for partition-cost
-      // A/Bs (e.g. the r17 c8-beats-c32 graph/streaming adjudication)
-      // without changing the parallelism. Unset (the driver's case) the
-      // contract default `partitions = $SPARK_GRAFT_CPUS` applies.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.codegen.maxFields", "250")
       .config("spark.sql.files.maxPartitionBytes", "4m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.functions.GraftExtensions)
+
+  /** Every remaining unpartitioned window in the library sits on a
+    * provably bounded domain (distinct calendar months/days, a 15-row
+    * top-k result, k cluster rows, a broadcast dimension's lead()) —
+    * each site carries a waiver comment, and PlanSpec pins the one
+    * shape where an unpartitioned window over unbounded input WOULD be
+    * a hazard (q17). WindowExec's blanket warning is therefore noise in
+    * this codebase; silence that one logger, keep everything else at
+    * WARN.
+    */
+  def muteBoundedWindowWarning(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
 }

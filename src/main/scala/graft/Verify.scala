@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,7 +11,7 @@ object Verify {
     // see [[Sessions.builder]] for each setting's rationale
     val spark = Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Bench.muteBoundedWindowWarning()
+    Sessions.muteBoundedWindowWarning()
     new java.io.File(outDir).mkdirs()
     writeOracles(outDir) // FIRST: a mid-run death must not lose the whole gate
     // optional trailing args: dump only the named queries (local
@@ -21,40 +20,16 @@ object Verify {
       if (only.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter { case (n, _) => only.contains(n) }
     // per-query wall-clock cap: one hanging query must not eat the
-    // whole correctness window — it is recorded as failed, the rest
-    // still dump (jobs cancelled via job group so executors free up)
+    // whole correctness window — it is recorded as failed and the rest
+    // still dump (see [[Runner]])
     val capSec = sys.env.getOrElse("SPARK_GRAFT_VERIFY_CAP", "300").toLong
-    val pool = java.util.concurrent.Executors.newCachedThreadPool()
     selected.foreach { case (name, fn) =>
-      val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val fut = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit =
-          try {
-            spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-            fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          } finally finished.set(true)
-      })
-      try fut.get(capSec, java.util.concurrent.TimeUnit.SECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(name)
-          fut.cancel(true)
-          // let the cancelled runner unwind before touching the cache
-          val deadline = System.nanoTime() + 30L * 1000000000L
-          while (!finished.get && System.nanoTime() < deadline) Thread.sleep(200)
-          System.err.println(s"[verify] $name: timed out (> ${capSec}s), jobs cancelled")
-        case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${Option(e.getCause).getOrElse(e).getMessage}")
+      Runner.run(spark, name, capSec) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // operators cache per-query frames (self-join sharing); a full
-      // ~145-query dump must not accumulate every query's corpus-scale
-      // caches in one JVM — same rule Bench applies after every query.
-      // NEVER clear while a timed-out runner may still be inside a
-      // cache build: Spark's CacheManager↔CachedRDDBuilder lock order
-      // inverts between clearCache and buildBuffers' recacheByPlan and
-      // the driver deadlocks (observed live in the round-8 sf1 sweep)
-      if (finished.get) spark.catalog.clearCache()
-      else System.err.println(s"[verify] $name: clearCache skipped (runner still unwinding)")
+      // a full dump must not accumulate every query's corpus-scale
+      // caches in one JVM — same rule Bench applies after every query
+      Runner.clearCache(spark)
     }
     spark.stop()
   }

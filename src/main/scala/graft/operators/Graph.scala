@@ -71,8 +71,7 @@ object Graph {
     * session's configured count — data-derived below the deployment
     * setting, identical to it once the graph is big enough (at sf10+
     * the rule is a no-op; on a real cluster it caps nothing until the
-    * graph drops under partitions×2 MB). A/B override:
-    * `spark.graft.loop.parts` (the [[TriBatchesKey]] conf pattern).
+    * graph drops under partitions×2 MB).
     * Join-inflated stats estimates (derived edge frames in unit specs)
     * hit the session cap and leave behavior unchanged — safe fallback.
     *
@@ -685,28 +684,22 @@ object Graph {
     * hub-heavy graph at 100 TB. The oracle counts the same triangles
     * with the naive a<b<c three-way join — plan-independent equality.
     */
-  /** Batch count for the census's wedge stage. Default "auto" derives
-    * K from the edge relation's Catalyst size stat (no job — the
-    * annArm discipline): 1 below 256 MB (the single-pass plan,
-    * unchanged at every gated SF), then one extra batch per 256 MB,
-    * capped at 16. Conf-overridable for A/B runs.
+  /** Batch count for the census's wedge stage, derived from the edge
+    * relation's Catalyst size stat (no job — the annArm discipline):
+    * 1 below 256 MB (the single-pass plan, unchanged at every gated
+    * SF), then one extra batch per 256 MB, capped at 16.
     */
-  private[graft] val TriBatchesKey = "spark.graft.tri.batches"
-
-  private def triBatchK(s: SparkSession, edges: DataFrame): Int =
-    s.conf.get(TriBatchesKey, "auto") match {
-      case "auto" =>
-        val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-        math.min(16, math.max(1, (bytes / (256L << 20)).toInt))
-      case v => math.max(1, v.toInt)
-    }
+  private def triBatchK(edges: DataFrame): Int = {
+    val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+    math.min(16, math.max(1, (bytes / (256L << 20)).toInt))
+  }
 
   private[graft] def triangles(s: SparkSession, d: String): DataFrame = {
     val edges = coEdges(s, d)
     val und = edges
       .filter(col("src") < col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
-    val k = triBatchK(s, edges)
+    val k = triBatchK(edges)
     if (k <= 1) trianglesOf(und)
     else ccOf(triCensusBatchedRaw(und, k))
   }

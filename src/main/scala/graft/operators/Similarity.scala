@@ -398,7 +398,11 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
   }
 
-  /** IVF top-k with the learned coarse quantizer (the q76 plan). */
+  /** IVF top-k with the learned coarse quantizer (the q76 plan): probe
+    * the [[IvfProbes]] best cells per query, gather candidates through
+    * the keyed cell equi-join, dedupe multi-assignment collisions,
+    * exact-cosine rerank, top-10.
+    */
   private[graft] def ivfTopk(s: SparkSession, d: String): DataFrame = {
     val el = elems(s, d).cache()
     val init = Tables.embeddings(s, d)
@@ -407,7 +411,39 @@ object Similarity {
     // consumed by cell assignment AND probe selection — cache so
     // the training lineage runs once, not per consumer
     val sc = scoresOf(el, trained).cache()
-    ivfProbe(el, sc, cellsOf(sc, IvfAssign))
+    val cells = cellsOf(sc, IvfAssign)
+    val probes = sc
+      .filter(col("vec_id") < 8)
+      .withColumn(
+        "pr",
+        row_number().over(
+          Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
+      .filter(col("pr") <= IvfProbes)
+      .select(col("vec_id").as("query_id"), col("cell"))
+    val cands = probes
+      .join(cells, Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      // a candidate sharing BOTH probed cells with the query would
+      // otherwise score twice (multi-assignment duplicates)
+      .select(col("query_id"), col("vec_id").as("cand_id"))
+      .distinct()
+    val pairDots = cands
+      .join(el.as("a"), col("query_id") === col("a.vec_id"))
+      .join(el.as("b"), col("cand_id") === col("b.vec_id") && col("a.pos") === col("b.pos"))
+      .groupBy(col("query_id"), col("cand_id"))
+      .agg(sum((col("a.x") * col("b.x")).cast(Acc)).cast("double").as("dot"))
+    val n = normsOf(el)
+    pairDots
+      .join(n.as("na"), col("query_id") === col("na.vec_id"))
+      .join(n.as("nb"), col("cand_id") === col("nb.vec_id"))
+      .select(col("query_id"), col("cand_id"), cosine(col("dot"), col("na.norm"), col("nb.norm")).as("cos"))
+      .withColumn(
+        "rnk",
+        row_number()
+          .over(Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("cand_id")))
+          .cast(IntegerType))
+      .filter(col("rnk") <= 10)
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** SQ8 top-k: int8 code scan + decimal-exact shortlist rerank (the
@@ -608,8 +644,8 @@ object Similarity {
     * is pinned ~0.69, so cand grows LINEARLY with the corpus (~1.1 M
     * rows at sf10) and an unconditional broadcast would eventually
     * hit driver memory and Spark's 8 GB broadcast limit; only a
-    * deployment that grows the cell count ~√N (see the XoverProbe
-    * scale tier) keeps the fraction shrinking. [[ivfPqServe]] gates
+    * deployment that grows the cell count ~√N keeps the fraction
+    * shrinking. [[ivfPqServe]] gates
     * on the estimated cand bytes and falls back to a shuffled join
     * past the threshold.
     */
@@ -763,18 +799,18 @@ object Similarity {
     * × corpus rows × 16 B, with corpus rows read from the embeddings
     * relation's Catalyst size stat (no job — the [[annArm]]
     * discipline; ~300 B per embedding row). Under the threshold
-    * (default 512 MB — comfortably inside driver memory and far from
-    * Spark's 8 GB broadcast hard limit) the exchange-free broadcast
-    * serve plan holds; past it the join falls back to a shuffle and
-    * AQE plans it — correctness is unchanged either way.
+    * (512 MB — comfortably inside driver memory and far from Spark's
+    * 8 GB broadcast hard limit) the exchange-free broadcast serve plan
+    * holds; past it the join falls back to a shuffle and AQE plans it
+    * — correctness is unchanged either way.
     */
-  private[graft] val CandBroadcastMaxKey = "spark.graft.ann.candBroadcastMaxBytes"
+  private val CandBroadcastMaxBytes = 512L << 20
 
   private def candBroadcastOk(s: SparkSession, d: String): Boolean = {
     val embBytes = Tables.embeddings(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
     val frac = math.min(1.0, IvfProbes.toDouble * IvfAssign / IvfCells)
     val candBytesEst = BigInt((embBytes.toDouble / 300.0 * 8 * frac * 16).toLong)
-    candBytesEst <= BigInt(s.conf.get(CandBroadcastMaxKey, (512L << 20).toString))
+    candBytesEst <= CandBroadcastMaxBytes
   }
 
   /** q199's serve path: frozen two-layer index + delta, prune-then-scan.
@@ -1387,133 +1423,4 @@ object Similarity {
         ORDER BY c.vec_id""")
     )
   )
-  /** The IVF probe stage shared by q76 (index trained inline) and the
-    * persisted-index path: probe the [[IvfProbes]] best cells per
-    * query, gather candidates through the keyed cell equi-join,
-    * dedupe multi-assignment collisions, exact-cosine rerank, top-10.
-    */
-  private def ivfProbe(el: DataFrame, sc: DataFrame, cells: DataFrame): DataFrame = {
-    val probes = sc
-      .filter(col("vec_id") < 8)
-      .withColumn(
-        "pr",
-        row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("pr") <= IvfProbes)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    val cands = probes
-      .join(cells, Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      // a candidate sharing BOTH probed cells with the query would
-      // otherwise score twice (multi-assignment duplicates)
-      .select(col("query_id"), col("vec_id").as("cand_id"))
-      .distinct()
-    val pairDots = cands
-      .join(el.as("a"), col("query_id") === col("a.vec_id"))
-      .join(el.as("b"), col("cand_id") === col("b.vec_id") && col("a.pos") === col("b.pos"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(sum((col("a.x") * col("b.x")).cast(Acc)).cast("double").as("dot"))
-    val n = normsOf(el)
-    pairDots
-      .join(n.as("na"), col("query_id") === col("na.vec_id"))
-      .join(n.as("nb"), col("cand_id") === col("nb.vec_id"))
-      .select(col("query_id"), col("cand_id"), cosine(col("dot"), col("na.norm"), col("nb.norm")).as("cos"))
-      .withColumn(
-        "rnk",
-        row_number()
-          .over(Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("cand_id")))
-          .cast(IntegerType))
-      .filter(col("rnk") <= 10)
-      .orderBy(col("query_id"), col("rnk"))
-  }
-
-  /** Persist the trained IVF index (coarse centroids + inverted
-    * assignments) as ONE snapshot-versioned table: centroid rows
-    * (`kind='c'`: cell, pos, c) and posting-list rows (`kind='a'`:
-    * vec_id, cell) union into a single frame published under a single
-    * atomic manifest. The quantizer and its posting lists therefore
-    * version TOGETHER by construction — a crash anywhere in the build
-    * leaves only orphan data files no manifest names, and the next
-    * successful rebuild publishes a complete, internally-consistent
-    * version. (The previous two-table layout committed centroids
-    * first; a torn build followed by a successful one could pair a
-    * stale quantizer with fresh posting lists at the same version
-    * number.) Returns the committed version.
-    */
-  private[graft] def buildIvfIndex(
-      s: SparkSession, d: String, tableDir: String): Int = {
-    val el = elems(s, d).cache()
-    val init = Tables.embeddings(s, d)
-      .select(col("vec_id"), (col("label") % IvfCells).cast(IntegerType).as("cell"))
-    // both halves of the index consume the trained centroids (the
-    // posting lists through the assignment lineage) — cache so
-    // training runs once, and unpersist once the snapshot is on disk
-    val trained = meansOf(el, cellsOf(scoresOf(el, meansOf(el, init)), 1)).cache()
-    try {
-      val cells = cellsOf(scoresOf(el, trained), IvfAssign)
-      val index = trained
-        .select(
-          lit("c").as("kind"), col("cell"), col("pos"), col("c"),
-          lit(null).cast("bigint").as("vec_id"))
-        .unionByName(cells.select(
-          lit("a").as("kind"), col("cell"),
-          lit(null).cast(IntegerType).as("pos"), lit(null).cast("double").as("c"),
-          col("vec_id")))
-      Snapshots.commit(index, s"$tableDir/index", replace = true)
-    } finally {
-      trained.unpersist()
-      el.unpersist()
-      ()
-    }
-  }
-
-  /** q76's search served from a persisted index version instead of the
-    * inline-trained one: centroids broadcast into the query scorer,
-    * candidates come from the stored posting list. Both halves come
-    * from ONE versioned table (see [[buildIvfIndex]]), so any version
-    * — latest or pinned — is internally consistent by construction;
-    * there is no cross-table pairing to resolve. The element frame is
-    * localCheckpoint'ed (the library-function pattern from
-    * globalCumsum): multiple consumers in the returned plan read one
-    * materialization, and the blocks free with the frame, no
-    * caller-visible cache to leak.
-    */
-  private[graft] def ivfTopkFromIndex(
-      s: SparkSession,
-      d: String,
-      tableDir: String,
-      version: Option[Int] = None): DataFrame = {
-    val el = elems(s, d).localCheckpoint(true)
-    val idx = Snapshots.read(s, s"$tableDir/index", version)
-    val cents = idx.filter(col("kind") === "c").select(col("cell"), col("pos"), col("c"))
-    val cells = idx.filter(col("kind") === "a").select(col("vec_id"), col("cell"))
-    ivfProbe(el, scoresOf(el, cents), cells)
-  }
-
-  /** Incrementally extend a persisted IVF index with NEW vectors — the
-    * classic ANN add() semantic: assign each incoming vector to its
-    * [[IvfAssign]] best cells under the EXISTING trained quantizer and
-    * append only those posting-list rows as a new snapshot version.
-    * Cost is O(new × k) scoring plus an O(delta) append commit; the
-    * prior postings and centroid rows are shared byte-for-byte and a
-    * reader pinned to the pre-append version is untouched. NO
-    * retraining happens by design — the quantizer slowly drifts from
-    * the growing corpus, so a real deployment interleaves appends with
-    * periodic [[buildIvfIndex]] rebuilds (the versioned table makes
-    * that swap atomic under concurrent readers). Caller contract:
-    * `newDir`'s vec_ids are new — re-appending an indexed id would
-    * duplicate its posting entries. Returns the committed version.
-    */
-  private[graft] def appendToIvfIndex(s: SparkSession, newDir: String, tableDir: String): Int = {
-    val el = elems(s, newDir).localCheckpoint(true)
-    val idx = Snapshots.read(s, s"$tableDir/index")
-    val cents = idx.filter(col("kind") === "c").select(col("cell"), col("pos"), col("c"))
-    val cells = cellsOf(scoresOf(el, cents), IvfAssign)
-    Snapshots.commit(
-      cells.select(
-        lit("a").as("kind"), col("cell"),
-        lit(null).cast(IntegerType).as("pos"), lit(null).cast("double").as("c"),
-        col("vec_id")),
-      s"$tableDir/index")
-  }
 }

@@ -86,24 +86,16 @@ object EventStream {
     * every declared query's stateful keys: hourly/session windows,
     * per-user totals, per-event-id dedup state, the join's
     * watermark-bounded row buffers), clamped to [1, cap]. The rule is
-    * corpus-derived and deployment-tunable (env), NOT host-derived:
-    * the same data gives the same partition count at any core count.
-    * A/B override: `spark.graft.stream.statePartitions` (the
-    * [[graft.operators.Graph.TriBatchesKey]] conf pattern).
+    * corpus-derived, NOT host-derived: the same data gives the same
+    * partition count at any core count.
     */
-  private val StateRowsPerPartition =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_ROWS", "1000000").toLong
-  private val StatePartitionsCap =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_MAX", "2048").toInt
+  private val StateRowsPerPartition = 1000000L
+  private val StatePartitionsCap = 2048L
 
-  private[graft] def statePartitionsFor(spark: SparkSession, rows: Long): Int =
-    spark.conf.getOption("spark.graft.stream.statePartitions") match {
-      case Some(v) => v.toInt
-      case None =>
-        math.min(
-          StatePartitionsCap.toLong,
-          math.max(1L, (rows + StateRowsPerPartition - 1) / StateRowsPerPartition)).toInt
-    }
+  private def statePartitionsFor(rows: Long): Int =
+    math.min(
+      StatePartitionsCap,
+      math.max(1L, (rows + StateRowsPerPartition - 1) / StateRowsPerPartition)).toInt
 
   /** Run a streaming DF to completion into a DISTRIBUTED parquet sink
     * (foreachBatch) and return the result read back; query names are
@@ -174,7 +166,7 @@ object EventStream {
       // count invariant (the cpus=5 Verify robustness axis), so this is
       // purely a state-commit-overhead decision.
       val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val stateParts = expectedInput.map(statePartitionsFor(spark, _))
+      val stateParts = expectedInput.map(statePartitionsFor)
       stateParts.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
       val q =
         try {

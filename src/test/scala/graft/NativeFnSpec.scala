@@ -302,80 +302,6 @@ class NativeFnSpec extends SparkSpec {
     assert(recall >= 0.95, s"filtered-ANN recall@10 degraded to $recall")
   }
 
-  test("persisted IVF index serves the same answers; pinned versions survive a rebuild") {
-    import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").resolve("idx").toString
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select("query_id", "cand_id", "rnk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
-    val inline = canon(SparkEntry.queries("q76_ivf_topk")(spark, sf("sf0.001")))
-    val v1 = Similarity.buildIvfIndex(spark, sf("sf0.001"), dir)
-    assert(v1 == 1)
-    assert(canon(Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), dir)) == inline,
-      "index-served search must equal the inline-trained q76")
-    // rebuild publishes v2; a reader pinning v1 still gets v1's answers
-    assert(Similarity.buildIvfIndex(spark, sf("sf0.001"), dir) == 2)
-    assert(canon(Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), dir, Some(1))) == inline,
-      "a pinned index version must survive reindexing")
-    assert(canon(Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), dir)) == inline,
-      "deterministic training: the rebuilt index answers identically")
-    // torn rebuild: a build that crashes mid-publish leaves orphan data
-    // files and a .tmp manifest no reader opens. Because quantizer and
-    // posting lists publish under ONE manifest, the torn build cannot
-    // leave half an index — and the NEXT successful rebuild claims the
-    // version number cleanly (the two-table layout's failure mode was a
-    // later rebuild pairing a stale quantizer with fresh posting lists)
-    val idxDir = java.nio.file.Paths.get(dir, "index")
-    java.nio.file.Files.createDirectories(idxDir.resolve("data/deadbeefcafe"))
-    java.nio.file.Files.write(
-      idxDir.resolve("_manifests/v00003.manifest.tmp"),
-      "data/deadbeefcafe/part-00000.parquet\n".getBytes("UTF-8"))
-    assert(canon(Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), dir)) == inline,
-      "a half-published rebuild must be invisible to latest-version readers")
-    assert(Similarity.buildIvfIndex(spark, sf("sf0.001"), dir) == 3,
-      "a successful rebuild after a torn one must publish the next version")
-    assert(canon(Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), dir)) == inline,
-      "the post-torn rebuild must serve a complete, consistent index")
-  }
-
-  test("IVF append indexes new vectors under the existing quantizer, sharing all prior files") {
-    import graft.operators.{Similarity, Snapshots}
-    import org.apache.spark.sql.functions.col
-    val base = java.nio.file.Files.createTempDirectory("graft_ivf_app")
-    val dirA = base.resolve("a").toString
-    val dirB = base.resolve("b").toString
-    val full = Tables.embeddings(spark, sf("sf0.001"))
-    full.filter(col("vec_id") < 400).write.parquet(dirA + "/embeddings.parquet")
-    full.filter(col("vec_id") >= 400).write.parquet(dirB + "/embeddings.parquet")
-    val nNew = full.filter(col("vec_id") >= 400).count()
-    assert(nNew > 0)
-    val idxTable = base.resolve("idx").toString
-    val v1 = Similarity.buildIvfIndex(spark, dirA, idxTable)
-    val v2 = Similarity.appendToIvfIndex(spark, dirB, idxTable)
-    assert((v1, v2) == (1, 2))
-    def index(v: Int) = Snapshots.read(spark, idxTable + "/index", Some(v))
-    // no retraining: centroid rows are identical across the append
-    def cents(v: Int) = index(v).filter(col("kind") === "c")
-      .collect().map(r => (r.get(1), r.get(2), r.get(3))).toSet
-    assert(cents(1) == cents(2), "append must not move the quantizer")
-    // exactly IvfAssign posting rows per appended vector, ids correct
-    def assigned(v: Int) = index(v).filter(col("kind") === "a")
-      .select("vec_id").collect().map(_.getLong(0))
-    val added = assigned(2).groupBy(identity).view.filterKeys(_ >= 400).toMap
-    assert(added.keySet == (400L until 400L + nNew).toSet, "every new vector must be indexed")
-    assert(added.values.forall(_.length == 2), "top-2 multi-assignment for appended vectors")
-    assert(assigned(1).forall(_ < 400), "pinned pre-append version untouched")
-    // O(delta) append: v2's manifest shares every v1 file byte-for-byte
-    val f1 = Snapshots.files(spark, idxTable + "/index", Some(1)).map(_.toString).toSet
-    val f2 = Snapshots.files(spark, idxTable + "/index", Some(2)).map(_.toString).toSet
-    assert(f1.subsetOf(f2), "append must share the prior index files, not rewrite them")
-    // the appended vectors are actually searchable: with the full corpus
-    // as element source, v2 serves candidates from the new id range
-    val hits = Similarity.ivfTopkFromIndex(spark, sf("sf0.001"), idxTable)
-      .filter(col("cand_id") >= 400).count()
-    assert(hits > 0, "appended vectors must be reachable through the probed cells")
-  }
-
   test("GraftExtensions injects both native functions into a fresh session") {
     import org.apache.spark.sql.SparkSession
     val orig = spark
