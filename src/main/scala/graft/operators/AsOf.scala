@@ -40,11 +40,25 @@ object AsOf {
       rightTime: String,
       by: Seq[String],
       rightPayload: Seq[String]
-  ): DataFrame = {
+  ): DataFrame =
     // the TYPED conf getter, not a raw-string .toLong: the conf's
     // string form carries byte-unit suffixes ("10485760b", "10m") that
     // a bare Long parse rejects
-    val threshold = left.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    dispatch(left, right, leftTime, rightTime, by, rightPayload,
+      left.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+
+  /** [[auto]] with the broadcast threshold (bytes; negative disables
+    * the broadcast arm) passed in rather than read from the session.
+    */
+  private[graft] def dispatch(
+      left: DataFrame,
+      right: DataFrame,
+      leftTime: String,
+      rightTime: String,
+      by: Seq[String],
+      rightPayload: Seq[String],
+      threshold: Long
+  ): DataFrame = {
     val rightBytes = right.queryExecution.optimizedPlan.stats.sizeInBytes
     // the exec compares raw physical values, so it requires identical
     // time/key types on both sides (frame() refuses otherwise); mixed

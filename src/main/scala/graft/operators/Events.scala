@@ -205,13 +205,12 @@ object Events {
     ),
 
     // AsOf.auto's dispatch boundary under the hash oracle: the SAME
-    // as-of contract evaluated through BOTH dispatch arms by moving
-    // `autoBroadcastJoinThreshold` to either side of the right side's
-    // size (-1 forces the co-partitioned streaming-merge exec; 1 TB
-    // forces the broadcast range join). `auto` reads the threshold
-    // EAGERLY at frame-construction time, and the broadcast arm pins
-    // its choice with an explicit broadcast() hint, so restoring the
-    // conf immediately after construction cannot flip either plan.
+    // as-of contract evaluated through BOTH dispatch arms by passing a
+    // broadcast threshold on either side of the right side's size (-1
+    // forces the co-partitioned streaming-merge exec; 1 TB forces the
+    // broadcast range join). The threshold is an argument of the
+    // dispatcher, so the session conf is never touched, and the
+    // broadcast arm pins its choice with an explicit broadcast() hint.
     // Each arm must independently reproduce the oracle rows — the
     // union is tagged so a divergence in either arm breaks the hash.
     Q(
@@ -222,24 +221,11 @@ object Events {
           .select(col("user_id"), col("event_id"), col("ts"))
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_event_id"))
-        def arm(threshold: String, tag: String) = {
-          val key = "spark.sql.autoBroadcastJoinThreshold"
-          // restore via getOption/unset: get() on an unset key renders
-          // the DEFAULT with its byte-unit suffix ("10485760b"), and
-          // setting that back would leave the session with an
-          // explicitly-set value a later caller may not expect
-          val saved = s.conf.getOption(key)
-          try {
-            s.conf.set(key, threshold)
-            AsOf.auto(purchases, clicks, "ts", "click_ts",
-                Seq("user_id"), Seq("click_event_id", "click_ts"))
-              .withColumn("arm", lit(tag))
-          } finally saved match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-        }
-        arm("-1", "merge").unionByName(arm(s"${1L << 40}", "broadcast"))
+        def arm(threshold: Long, tag: String) =
+          AsOf.dispatch(purchases, clicks, "ts", "click_ts",
+              Seq("user_id"), Seq("click_event_id", "click_ts"), threshold)
+            .withColumn("arm", lit(tag))
+        arm(-1L, "merge").unionByName(arm(1L << 40, "broadcast"))
           .select(
             col("arm"), col("user_id"), col("event_id"),
             unix_micros(col("ts")).as("ts_us"),

@@ -53,35 +53,6 @@ object Graph {
     if (java.lang.Long.parseLong(hex.substring(0, 15), 16) % 2 == 0) 1L else -1L
   }
 
-  /** Shuffle-partition sizing for the ITERATIVE graph loops (PageRank /
-    * k-core / CC label propagation and their warm-start twins), guide
-    * §2.2 applied where AQE cannot reach: the loops pin edge frames in
-    * the cache and eagerly checkpoint round frames, both of which FREEZE
-    * their partition count before AQE's coalescing sees it, so per-round
-    * exchanges on node-sized frames ran at the deployment's full
-    * fan-out (`spark.sql.shuffle.partitions` = 32 locally) even when the
-    * whole graph is a few MB — and per-partition per-round task/state
-    * overhead then dominates: the r17 driver's 8-core run beat 32 cores
-    * outright on this family (q171 0.54, q173 0.58, q150 0.64, q157
-    * 0.68), and a constant-core A/B at sf0.1 (cpus=32, shuffle 32→4)
-    * reads q150 3.40→1.34 s, q156 3.39→1.54, q157 3.41→1.79, q171
-    * 3.63→1.65, q173 4.28→1.98 with 4–8 the optimum and 1–2 already
-    * over-serialized. Rule: one partition per 2 MB of the loop's edge
-    * frame (Catalyst size stats — no job), NEVER exceeding the
-    * session's configured count — data-derived below the deployment
-    * setting, identical to it once the graph is big enough (at sf10+
-    * the rule is a no-op; on a real cluster it caps nothing until the
-    * graph drops under partitions×2 MB).
-    * Join-inflated stats estimates (derived edge frames in unit specs)
-    * hit the session cap and leave behavior unchanged — safe fallback.
-    *
-    * The wedge-enumeration censuses (q151/q168) and the GAT layers
-    * (q149) are deliberately NOT wrapped: they are compute-bound joins
-    * that WANT the fan-out (same A/B: q151 3.57→10.97 s at 4).
-    */
-  private def withGraphParts[T](sized: DataFrame)(body: => T): T =
-    graft.Parts.sized(sized)(body)
-
   /** Co-purchase edge list (src, dst, w): both directions, grouped.
     * The projected 2-column lineitem is cached because it feeds both
     * sides of the self-join (no exchange reuse across a self-join).
@@ -337,7 +308,7 @@ object Graph {
     * graphs.
     */
   private[graft] def pagerankOf(nodes: DataFrame, edRaw: DataFrame): DataFrame =
-    withGraphParts(edRaw) {
+    graft.Parts.sized(edRaw) {
       // pin the edge partitioning on src ONCE: every iteration's
       // contribution join then reuses the cached layout and only the
       // node-sized rank frame moves — the big side never re-shuffles
@@ -454,7 +425,7 @@ object Graph {
     * drives on synthetic graphs with hand-checkable proximity.
     */
   private[graft] def pprOf(parts: DataFrame, edRaw: DataFrame, seedIds: DataFrame): DataFrame =
-    withGraphParts(edRaw) {
+    graft.Parts.sized(edRaw) {
     val ed = edRaw.repartition(col("src")).cache()
     val deg = ed.groupBy(col("src")).agg(sum(col("w")).as("deg"))
     val seeds = seedIds.select(col("part_id"), lit(1L).as("seed"))
@@ -571,7 +542,7 @@ object Graph {
     kcoreOf(undEdges(s, d))
 
   private[graft] def kcoreOf(undRaw: DataFrame): DataFrame =
-    withGraphParts(undRaw) {
+    graft.Parts.sized(undRaw) {
     var und = undRaw.localCheckpoint(true)
     // 2-round checkpoint cadence — see [[pagerankOf]]. The surviving
     // edge frame is consumed THREE times per round (two degree
@@ -945,7 +916,7 @@ object Graph {
     // size on the pinned base edge snapshot when the caller has one
     // (accurate file stats); the merged frame's own estimate rides a
     // delta self-join and inflates to the session cap (safe no-op)
-    withGraphParts(Option(sizedOn).getOrElse(edMRaw)) {
+    graft.Parts.sized(Option(sizedOn).getOrElse(edMRaw)) {
     val edM = edMRaw.repartition(col("src")).cache()
     val degM = edM.groupBy(col("src")).agg(sum(col("w")).as("deg"))
     val base = basePr.select(col("part_id"), col("pr").as("pr_base"))
@@ -1158,7 +1129,7 @@ object Graph {
     * touched arrays, and T3 is a delta-only three-way join.
     */
   private[graft] def triangleDeltaFromArrays(arrB: DataFrame, undD: DataFrame): DataFrame =
-    withGraphParts(arrB) {
+    graft.Parts.sized(arrB) {
     val emptyArr = typedLit(Seq.empty[Long])
     // an edge already in the base adds nothing: membership via the
     // u-side base array (delta-sized join against the node-sized table)
@@ -1467,7 +1438,7 @@ object Graph {
     */
   private[graft] def kcoreDelta(
       undB: DataFrame, coreB: DataFrame, undD: DataFrame): DataFrame =
-    withGraphParts(undB) {
+    graft.Parts.sized(undB) {
     val coreNodes = coreB.select(col("part_id").as("n"))
     // shared input construction (see [[closureInputFrames]]); deltaNew
     // and nonCoreEdges are multiply consumed → cached here (cache
@@ -1639,7 +1610,7 @@ object Graph {
     * Checkpoint cadence + progressive cache release per [[prIterate]].
     */
   private[graft] def ccLabels(nodes: DataFrame, undRaw: DataFrame, rounds: Int): DataFrame =
-    withGraphParts(undRaw) {
+    graft.Parts.sized(undRaw) {
     // pinned on b — the label-fetch join key — so per round only the
     // node-sized label frame shuffles to the edges, never the reverse
     val adj = undRaw.select(col("u").as("a"), col("v").as("b"))

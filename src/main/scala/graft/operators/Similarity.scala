@@ -966,32 +966,25 @@ object Similarity {
       "JOIN cand cn ON cn.query_id = d.query_id AND cn.cand_id = k.vec_id")
   }
 
-  /** ANN auto-dispatch thresholds (bytes of the embeddings relation,
-    * Catalyst plan statistics — no job). Conf-overridable so a
-    * deployment tunes the crossover to its hardware; the defaults
-    * encode the cost classes:
-    *  - ≤ [[BruteMaxKey]] (default 32 MB): exact brute force — at
-    *    this size the pos-join scan is cheaper than any index build
-    *    and the answer is exact;
-    *  - ≤ [[Sq8MaxKey]] (default 4 GB): SQ8 — the 1-byte/dim code
-    *    scan keeps the candidate pass 4× lighter with no standing
-    *    index to maintain;
+  private val BruteMax = 32L << 20
+  private val Sq8Max = 4L << 30
+
+  /** Which arm [[annTopk]] would run for this dataset, by the bytes of
+    * the embeddings relation (Catalyst plan statistics — no job). The
+    * default thresholds encode the cost classes:
+    *  - ≤ `bruteMax` (default 32 MB): exact brute force — at this
+    *    size the pos-join scan is cheaper than any index build and
+    *    the answer is exact;
+    *  - ≤ `sq8Max` (default 4 GB): SQ8 — the 1-byte/dim code scan
+    *    keeps the candidate pass 4× lighter with no standing index;
     *  - above: IVF — at corpus scale only a cell-bucketed candidate
     *    join avoids scanning everything per query, worth the trained
     *    quantizer it requires.
     */
-  private[graft] val BruteMaxKey = "spark.graft.ann.bruteMaxBytes"
-  private[graft] val Sq8MaxKey = "spark.graft.ann.sq8MaxBytes"
-
-  /** Which arm [[annTopk]] would run for this dataset — read EAGERLY
-    * from the session conf at call time (the q115 lesson: a lazily
-    * read conf lets a later caller flip an already-constructed plan).
-    */
-  private[graft] def annArm(s: SparkSession, d: String): String = {
+  private[graft] def annArm(s: SparkSession, d: String,
+      bruteMax: Long = BruteMax, sq8Max: Long = Sq8Max): String = {
     val bytes = Tables.embeddings(s, d)
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val bruteMax = BigInt(s.conf.get(BruteMaxKey, (32L << 20).toString))
-    val sq8Max = BigInt(s.conf.get(Sq8MaxKey, (4L << 30).toString))
     if (bytes <= bruteMax) "brute" else if (bytes <= sq8Max) "sq8" else "ivf"
   }
 
@@ -1000,13 +993,15 @@ object Similarity {
     * formulation picked by corpus size via [[annArm]]. All three arms
     * produce the identical (query_id, cand_id, cos, rnk) contract and
     * each is independently hash-gated (q51/q76/q139 + the q184
-    * three-arm dispatch query); SimilaritySpec pins the boundary.
+    * three-arm dispatch query); NativeFnSpec pins the boundary.
     */
-  def annTopk(s: SparkSession, d: String): DataFrame = annArm(s, d) match {
-    case "brute" => bruteTopk(s, d)
-    case "sq8"   => sq8Topk(s, d)
-    case _       => ivfTopk(s, d)
-  }
+  def annTopk(s: SparkSession, d: String,
+      bruteMax: Long = BruteMax, sq8Max: Long = Sq8Max): DataFrame =
+    annArm(s, d, bruteMax, sq8Max) match {
+      case "brute" => bruteTopk(s, d)
+      case "sq8"   => sq8Topk(s, d)
+      case _       => ivfTopk(s, d)
+    }
 
   val all: Seq[Q] = Seq(
     // embedding-cosine near-dup pairs (brute force over pos-join; the
@@ -1259,33 +1254,24 @@ object Similarity {
 
     // [[annTopk]]'s dispatch boundary under the hash oracle (the q115
     // pattern applied to ANN): the SAME top-k contract evaluated
-    // through ALL THREE dispatch arms by moving the size thresholds to
-    // either side of the embeddings relation's actual size. annTopk
-    // reads the thresholds EAGERLY at frame-construction time, so
-    // restoring the conf immediately after construction cannot flip a
-    // plan. Each arm must independently reproduce ITS oracle rows
-    // (brute/IVF/SQ8 are distinct algorithms with distinct — all
-    // deterministic — answers); the union is tagged so a divergence
-    // in any arm breaks the hash.
+    // through ALL THREE dispatch arms by passing size thresholds on
+    // either side of the embeddings relation's actual size — arguments
+    // of the dispatcher, so the session conf is never touched. Each
+    // arm must independently reproduce ITS oracle rows (brute/IVF/SQ8
+    // are distinct algorithms with distinct — all deterministic —
+    // answers); the union is tagged so a divergence in any arm breaks
+    // the hash.
     Q(
       "q184_ann_auto_dispatch",
       (s, d) => {
-        def arm(bruteMax: String, sq8Max: String, tag: String) = {
-          val saved = Seq(BruteMaxKey, Sq8MaxKey).map(k => k -> s.conf.getOption(k))
-          try {
-            s.conf.set(BruteMaxKey, bruteMax)
-            s.conf.set(Sq8MaxKey, sq8Max)
-            val chosen = annArm(s, d)
-            require(chosen == tag, s"dispatch expected $tag, chose $chosen")
-            annTopk(s, d).withColumn("arm", lit(tag))
-          } finally saved.foreach {
-            case (k, Some(v)) => s.conf.set(k, v)
-            case (k, None)    => s.conf.unset(k)
-          }
+        def arm(bruteMax: Long, sq8Max: Long, tag: String) = {
+          val chosen = annArm(s, d, bruteMax, sq8Max)
+          require(chosen == tag, s"dispatch expected $tag, chose $chosen")
+          annTopk(s, d, bruteMax, sq8Max).withColumn("arm", lit(tag))
         }
-        arm(Long.MaxValue.toString, Long.MaxValue.toString, "brute")
-          .unionByName(arm("-1", Long.MaxValue.toString, "sq8"))
-          .unionByName(arm("-1", "-1", "ivf"))
+        arm(Long.MaxValue, Long.MaxValue, "brute")
+          .unionByName(arm(-1L, Long.MaxValue, "sq8"))
+          .unionByName(arm(-1L, -1L, "ivf"))
           .select(col("arm"), col("query_id"), col("cand_id"), col("cos"), col("rnk"))
           .orderBy(col("arm"), col("query_id"), col("rnk"))
       },

@@ -124,7 +124,7 @@ object EventStream {
       spark: SparkSession,
       df: DataFrame,
       mode: String,
-      expectedInput: Option[Long] = None): DataFrame = {
+      expectedInput: Long): DataFrame = {
     val name = s"graft_stream_${java.util.UUID.randomUUID.toString.replace("-", "")}"
     // input accounting via a StreamingQueryListener keyed on the
     // per-call-unique query name — exact for ANY number of
@@ -161,35 +161,30 @@ object EventStream {
           .parquet(outDir)
       // corpus-derived state-store sizing (see [[statePartitionsFor]]):
       // `spark.sql.shuffle.partitions` is read once at stream start and
-      // pinned for the checkpoint lifetime, so set it for the stream and
-      // restore for the batch read-back below. Results are partition-
-      // count invariant (the cpus=5 Verify robustness axis), so this is
-      // purely a state-commit-overhead decision.
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val stateParts = expectedInput.map(statePartitionsFor)
-      stateParts.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-      val q =
-        try {
-          val started = df.writeStream
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(Trigger.AvailableNow())
-            .foreachBatch(writeBatch)
-            .start()
-          started.awaitTermination()
-          started
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      expectedInput.foreach { exp =>
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (!terminatedRuns.contains(q.runId) && System.nanoTime() < deadline)
-          Thread.sleep(10)
-        require(terminatedRuns.contains(q.runId),
-          "listener bus never delivered this query's termination event")
-        val got = inputRows.get()
-        require(got == exp,
-          s"stream ingested $got input rows but the static files hold $exp — " +
-            "schema drift or dropped data; refusing to emit a result")
+      // pinned for the checkpoint lifetime, so scope it to the stream
+      // and the batch read-back below runs at the session count.
+      // Results are partition-count invariant (the cpus=5 Verify
+      // robustness axis), so this is purely a state-commit-overhead
+      // decision, and it is not clamped to the session count.
+      val q = graft.Parts.scoped(spark)(_ => statePartitionsFor(expectedInput)) {
+        val started = df.writeStream
+          .queryName(name)
+          .outputMode(mode)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch(writeBatch)
+          .start()
+        started.awaitTermination()
+        started
       }
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!terminatedRuns.contains(q.runId) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      require(terminatedRuns.contains(q.runId),
+        "listener bus never delivered this query's termination event")
+      val got = inputRows.get()
+      require(got == expectedInput,
+        s"stream ingested $got input rows but the static files hold $expectedInput — " +
+          "schema drift or dropped data; refusing to emit a result")
       // an empty source fires no batch → no dir; degrade to an empty
       // frame with the query's schema instead of a read error
       if (new java.io.File(outDir).exists())
@@ -210,7 +205,7 @@ object EventStream {
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
     runToTable(spark, agged, "complete",
-        Some(staticRowCount(spark, dir, "events.parquet")))
+        staticRowCount(spark, dir, "events.parquet"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n"), col("sum_value"))
@@ -245,7 +240,7 @@ object EventStream {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_events").desc)
     runToTable(spark, updated, "update",
-        Some(staticRowCount(spark, dir, "events.parquet")))
+        staticRowCount(spark, dir, "events.parquet"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -264,7 +259,7 @@ object EventStream {
       .groupBy(coalesce(col("segment"), lit("UNKNOWN")).as("segment"))
       .agg(count(lit(1)).as("n"), Det.dsum(col("value")).as("sum_value"))
     runToTable(spark, agged, "complete",
-      Some(staticRowCount(spark, dir, "events.parquet")))
+      staticRowCount(spark, dir, "events.parquet"))
   }
 
   /** Streaming exact dedup: the input is doubled (self-union) and
@@ -283,7 +278,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"))
     // self-union: the source set is read twice
     runToTable(spark, deduped, "complete",
-      Some(2 * staticRowCount(spark, dir, "events.parquet")))
+      2 * staticRowCount(spark, dir, "events.parquet"))
   }
 
   /** STREAM-STREAM inner join: purchases joined to the same user's
@@ -313,7 +308,7 @@ object EventStream {
         col("click_ts") <= col("p_ts"))
     // two independent readers over the same files
     runToTable(spark, joined, "append",
-        Some(2 * staticRowCount(spark, dir, "events.parquet")))
+        2 * staticRowCount(spark, dir, "events.parquet"))
       .groupBy(col("purchase_id"), col("p_user").as("user_id"))
       .agg(count(lit(1)).as("n_clicks"))
   }
@@ -378,7 +373,7 @@ object EventStream {
       }
       .toDF("user_id", "event_id", "ts_us", "click_event_id", "click_ts_us")
     runToTable(spark, attributed, "append",
-      Some(staticRowCount(spark, dir, glob)))
+      staticRowCount(spark, dir, glob))
   }
 
   /** Gap-based sessions (30 min) via the native session_window —
@@ -395,7 +390,7 @@ object EventStream {
         max(unix_micros(col("ts"))).as("end_us"),
         Det.dsum(col("value")).as("sum_value"))
     runToTable(spark, agged, "complete",
-        Some(staticRowCount(spark, dir, "events.parquet")))
+        staticRowCount(spark, dir, "events.parquet"))
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"), col("sum_value"))
   }
 
@@ -422,6 +417,6 @@ object EventStream {
       .groupBy(col("d"), TextFns.cmsCell(col("k"), col("d"), 256).as("cell"))
       .agg(count(lit(1)).as("c"))
     runToTable(spark, cells, "complete",
-      Some(staticRowCount(spark, dir, glob)))
+      staticRowCount(spark, dir, glob))
   }
 }

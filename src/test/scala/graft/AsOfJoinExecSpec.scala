@@ -237,14 +237,11 @@ class AsOfJoinExecSpec extends SparkSpec {
     val r = (1 to 2000).map(i =>
       (1, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), i.toLong))
       .toDF("k", "rt", "rid")
-    val saved = ext.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    ext.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force past broadcast arm
-    try {
-      // would throw in frame() if auto still dispatched the exec;
-      // composed backward coerces the date axis and answers correctly
-      val out = AsOf.auto(l, r, "t", "rt", Seq("k"), Seq("rid")).collect()
-      assert(out.length == 1 && out.head.getAs[Long]("rid") == 2000L)
-    } finally ext.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    // threshold -1 forces past the broadcast arm; this would throw in
+    // frame() if the dispatcher still chose the exec — composed
+    // backward coerces the date axis and answers correctly
+    val out = AsOf.dispatch(l, r, "t", "rt", Seq("k"), Seq("rid"), -1L).collect()
+    assert(out.length == 1 && out.head.getAs[Long]("rid") == 2000L)
   }
 
   test("nearest distances compare exactly for long times above 2^53") {
@@ -284,7 +281,10 @@ class AsOfJoinExecSpec extends SparkSpec {
     val r = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts").as("cts"), col("event_id").as("ceid"))
     val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = ext.conf.get(key)
+    // restore by contains/unset: get() (and getOption) on an unset key
+    // render the default ("10485760b"), and setting that back would
+    // leave the key explicitly set on the shared session
+    val old = Option.when(ext.sessionState.conf.contains(key))(ext.conf.get(key))
     try {
       ext.conf.set(key, "1048576") // sf0.001 clicks fit: broadcast path
       val pSmall = AsOf.auto(l, r, "ts", "cts", Seq("user_id"), Seq("ceid"))
@@ -294,7 +294,7 @@ class AsOfJoinExecSpec extends SparkSpec {
       val pBig = AsOf.auto(l, r, "ts", "cts", Seq("user_id"), Seq("ceid"))
         .queryExecution.executedPlan.toString
       assert(pBig.contains("AsOfJoin "), s"large right must take the merge exec:\n$pBig")
-    } finally ext.conf.set(key, old)
+    } finally old.fold(ext.conf.unset(key))(ext.conf.set(key, _))
   }
 
   test("empty right side yields all-null payload") {

@@ -335,34 +335,22 @@ class NativeFnSpec extends SparkSpec {
 
   test("annTopk dispatch boundary: size thresholds select brute/sq8/ivf; arms match their anchors") {
     val d = sf("sf0.001")
-    def withThresholds[A](bruteMax: String, sq8Max: String)(body: => A): A = {
-      val saved = Seq(Similarity.BruteMaxKey, Similarity.Sq8MaxKey)
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set(Similarity.BruteMaxKey, bruteMax)
-        spark.conf.set(Similarity.Sq8MaxKey, sq8Max)
-        body
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-    val big = Long.MaxValue.toString
+    val big = Long.MaxValue
     // the boundary itself: each threshold placement selects its arm
-    assert(withThresholds(big, big)(Similarity.annArm(spark, d)) == "brute")
-    assert(withThresholds("-1", big)(Similarity.annArm(spark, d)) == "sq8")
-    assert(withThresholds("-1", "-1")(Similarity.annArm(spark, d)) == "ivf")
+    assert(Similarity.annArm(spark, d, big, big) == "brute")
+    assert(Similarity.annArm(spark, d, -1L, big) == "sq8")
+    assert(Similarity.annArm(spark, d, -1L, -1L) == "ivf")
     // defaults: the graded corpora are tiny → the exact arm
     assert(Similarity.annArm(spark, d) == "brute",
       "sf0.001 embeddings must dispatch to the exact arm under default thresholds")
     // each dispatched frame IS its anchor query's frame (row-identical)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSeq
-    assert(withThresholds(big, big)(rows(Similarity.annTopk(spark, d)))
+    assert(rows(Similarity.annTopk(spark, d, big, big))
       == rows(Similarity.bruteTopk(spark, d)))
-    assert(withThresholds("-1", big)(rows(Similarity.annTopk(spark, d)))
+    assert(rows(Similarity.annTopk(spark, d, -1L, big))
       == rows(Similarity.sq8Topk(spark, d)))
-    assert(withThresholds("-1", "-1")(rows(Similarity.annTopk(spark, d)))
+    assert(rows(Similarity.annTopk(spark, d, -1L, -1L))
       == rows(Similarity.ivfTopk(spark, d)))
     spark.catalog.clearCache()
   }
