@@ -58,7 +58,7 @@ object GenData {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def read(t: String): DataFrame = Tables(spark, src, t)
     // one parquet FILE per table (driver layout): the streaming readers
     // select tables with pathGlobFilter=<t>.parquet, which matches leaf
     // FILES — a <t>.parquet directory of part files would be invisible
@@ -81,7 +81,7 @@ object GenData {
       fs.delete(target, false)
       require(fs.rename(part, target), s"could not publish $target")
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      println(s"[gendata] $t: ${spark.read.parquet(s"$out/$t.parquet").count()} rows")
+      println(s"[gendata] $t: ${Tables(spark, out, t).count()} rows")
     }
     val cps = spark.range(copies).select(col("id").cast("long").as("cp"))
     def shiftedDf(df: DataFrame, keys: Seq[String]): DataFrame = {

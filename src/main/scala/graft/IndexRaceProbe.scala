@@ -27,7 +27,7 @@ object IndexRaceProbe {
       // hold the build open so a concurrently-launched peer is
       // guaranteed to enter the cold-store build path too
       Thread.sleep(3000)
-      val nation = spark.read.parquet(s"$d/nation.parquet")
+      val nation = Tables.nation(spark, d)
         .select($"n_nationkey".cast("long").as("k"), $"n_name".as("v"))
       val v = operators.Snapshots.commit(nation, dirOf("snap"), replace = true)
       IndexStore.publishPlainDir(dirOf("plain")) { tmp =>

@@ -19,18 +19,20 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
   */
 object EventStream {
 
-  /** Stream-source schema, derived from the actual parquet footers (a
-    * driver-side metadata read of the static files — no job). A pinned
-    * literal schema silently misreads regenerated data (micros-as-nanos
-    * → timestamps 1000× off, wrong windows with no error); deriving it
-    * makes the stream track whatever vintage is on disk, and
-    * [[graft.Tables.normalizeEventTs]] branches on the ts dtype exactly
-    * as the batch reader does.
+  /** Stream-source schema, derived from the actual parquet footers
+    * through [[graft.Tables.read]] (inferred once per file fingerprint).
+    * A pinned literal schema silently misreads regenerated data
+    * (micros-as-nanos → timestamps 1000× off, wrong windows with no
+    * error); deriving it makes the stream track whatever vintage is on
+    * disk, and [[graft.Tables.normalizeEventTs]] branches on the ts
+    * dtype exactly as the batch reader does. The glob names leaf files
+    * directly under `dir`, so `dir/glob` reads the files the stream's
+    * `pathGlobFilter` selects.
     */
   private def sourceSchema(
       spark: SparkSession, dir: String, glob: String): org.apache.spark.sql.types.StructType = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.option("pathGlobFilter", glob).parquet(dir).schema
+    spark.conf.set(Tables.NanosAsLong, "true")
+    Tables.read(spark, s"$dir/$glob").schema
   }
 
   /** Total rows in the static files the glob matches, from parquet
@@ -252,7 +254,7 @@ object EventStream {
     * side re-resolves per batch — the streaming twin of J7/J8.
     */
   def segmentTotals(spark: SparkSession, dir: String): DataFrame = {
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
+    val dim = Tables.customer(spark, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
     val agged = readEvents(spark, dir)
       .join(broadcast(dim), Seq("user_id"), "left")

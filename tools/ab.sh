@@ -1,0 +1,109 @@
+#!/bin/bash
+# Alternated A/B of the benchmark: a parent revision against the working
+# tree, one pair of runs per seed.
+#
+# Usage: tools/ab.sh <parent-rev> <workload> <seed>...
+#   e.g. tools/ab.sh HEAD~1 dashboard 101 102 103 104 105 106 107 108 109 110
+#
+# The parent's committed files are exported (git archive) into a
+# temporary directory; the change side is the working tree this script
+# sits in. Each side runs its own tree's
+#   python3 perfbench/run.py --workload <workload> --seed <seed> --seconds 15 --trace 0
+# one after the other, the parent first on the 1st, 3rd, ... seed and
+# the change first on the others, so a host that speeds up or slows down
+# during the session does not favour one side. Progress and every result
+# line go to stderr; stdout gets, per end-to-end metric of BENCHMARK.json,
+# each side's runs, median and quartiles, the pairs each side won (ties
+# count for neither) and a verdict:
+#   gain          the change won >= 9/10 of the pairs and its median is
+#                 better by more than the parent's interquartile range
+#   worse         the change's median is worse than the parent's by more
+#                 than the metric's bound
+#   unresolved    neither, and one side's spread (IQR / median) exceeds
+#                 the bound
+#   within bound  otherwise
+# A run that fails (non-zero exit, or failed ops) is reported and left
+# out of its pair. Needs SPARK_HOME; perfbench refuses to start beside
+# another JVM, so nothing else Spark may run meanwhile.
+set -euo pipefail
+[ $# -ge 3 ] || { echo "usage: $0 <parent-rev> <workload> <seed>..." >&2; exit 2; }
+REV=$1 WORKLOAD=$2; shift 2
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+WORK=$(mktemp -d)
+trap 'rm -rf "$WORK"' EXIT
+mkdir -p "$WORK/parent"
+git -C "$ROOT" archive "$REV" | tar -x -C "$WORK/parent"
+
+run() {  # run <side> <seed>: appends "<side> <seed> <result json>" to the results
+  local side=$1 seed=$2 tree line
+  tree=$([ "$side" = parent ] && echo "$WORK/parent" || echo "$ROOT")
+  echo "ab: $side seed=$seed" >&2
+  if line=$(cd "$tree" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$seed" \
+      --seconds 15 --trace 0 2> "$WORK/$side-$seed.log" | tail -1) && [ -n "$line" ]; then
+    echo "ab: $side seed=$seed $line" >&2
+    echo "$side $seed $line" >> "$WORK/results"
+  else
+    echo "ab: $side seed=$seed FAILED:" >&2
+    tail -5 "$WORK/$side-$seed.log" >&2
+  fi
+}
+
+i=0
+for seed in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then run parent "$seed"; run change "$seed"
+  else run change "$seed"; run parent "$seed"; fi
+  i=$((i + 1))
+done
+touch "$WORK/results"
+
+python3 - "$ROOT/BENCHMARK.json" "$WORK/results" "$WORKLOAD" <<'EOF'
+import json
+import statistics
+import sys
+
+bench, results, workload = sys.argv[1:]
+runs = {"parent": {}, "change": {}}
+for line in open(results):
+    side, seed, js = line.split(" ", 2)
+    r = json.loads(js)
+    if r["failed"] or not r["correct"]:
+        print(f"{side} seed={seed}: {r['failed']} of {r['attempted']} ops failed; run left out")
+    else:
+        runs[side][seed] = {k: v["value"] for k, v in r["metrics"].items()}
+seeds = [s for s in runs["parent"] if s in runs["change"]]
+print(f"{workload}: {len(seeds)} complete pairs (seeds {' '.join(seeds)})")
+
+
+def quart(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[0], q[1], q[2]
+
+
+for m in json.load(open(bench))["end_to_end"]:
+    name, bound, lower = m["name"], m["bound"], m["better"] == "lower"
+    p = [runs["parent"][s][name] for s in seeds if name in runs["parent"][s]]
+    c = [runs["change"][s][name] for s in seeds if name in runs["change"][s]]
+    if not p or len(p) != len(c):
+        print(f"{name}: no complete pairs")
+        continue
+    better = (lambda a, b: a < b) if lower else (lambda a, b: a > b)
+    wins_c = sum(better(b, a) for a, b in zip(p, c))
+    wins_p = sum(better(a, b) for a, b in zip(p, c))
+    (pq1, pm, pq3), (cq1, cm, cq3) = quart(p), quart(c)
+    gain = (pm - cm) if lower else (cm - pm)
+    if wins_c >= 0.9 * len(p) and gain > pq3 - pq1:
+        verdict = "gain"
+    elif -gain > bound * abs(pm):
+        verdict = "worse"
+    elif max((pq3 - pq1) / abs(pm) if pm else 0, (cq3 - cq1) / abs(cm) if cm else 0) > bound:
+        verdict = "unresolved"
+    else:
+        verdict = "within bound"
+    ratio = f"{cm / pm:.3f}" if pm else "n/a"
+    print(f"{name} ({m['unit']}, {m['better']} is better, bound {bound}): {verdict}")
+    print(f"  parent median {pm:.4g} [q1 {pq1:.4g}, q3 {pq3:.4g}] runs {' '.join(f'{v:.4g}' for v in p)}")
+    print(f"  change median {cm:.4g} [q1 {cq1:.4g}, q3 {cq3:.4g}] runs {' '.join(f'{v:.4g}' for v in c)}")
+    print(f"  change/parent {ratio}; pairs won: change {wins_c}, parent {wins_p}, of {len(p)}")
+EOF
