@@ -3,10 +3,10 @@ package graft.operators
 import graft.{Det, Q, Tables}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The reference's product-mix-clustering core (SURVEY.md §2.10 /
   * `/root/reference/src/pipelines/clustering.py:56-136`), re-expressed
@@ -1193,9 +1193,13 @@ object MLOps {
         Map("wh" -> 0)
       }("wh"))
 
-  /** KMeans on a z-scored frame; labels canonicalized by (cluster size
-    * desc, first-feature centroid asc) so re-runs and library versions
-    * with the same partition produce identical ids.
+  /** MLlib KMeans (k-means|| init, seed 42); labels canonicalized by
+    * (cluster size desc, first-feature centroid asc) so re-runs and
+    * library versions with the same partition produce identical ids.
+    * Its callers are q57 (the declared MLlib cost, certificate-gated)
+    * and the specs that hold the nightly fit, [[kmeansLocal]], to
+    * MLlib's quality. Its labels depend on the partitioning, and a
+    * NULL feature (the z of a constant column) fails the assembler.
     */
   def kmeansCanonical(
       df: DataFrame,
@@ -1215,6 +1219,126 @@ object MLOps {
           .cast(IntegerType))
       .select(col("raw_cluster"), col("cluster"))
     fitted.join(broadcast(relabel), "raw_cluster").drop("raw_cluster", "fv")
+  }
+
+  // ---------------------------------------------------------------
+  // The nightly product clustering (ClusteringJob): the reference's
+  // `KMeans(n_clusters=4, random_state=42)` (clustering.py:130-131),
+  // i.e. sklearn's recipe — greedy k-means++ seeding, 10 restarts
+  // keeping the lowest inertia, Lloyd rounds — fitted on the driver
+  // over the collected z-matrix. The constants are sklearn's n_init
+  // and the reference's seed, MLlib's maxIter and tol.
+  // ---------------------------------------------------------------
+
+  private val FitRestarts = 10
+  private val FitSeed = 42L
+  private val FitRounds = 20
+  private val FitTol = 1e-4
+
+  /** (`idCol`, `cluster`) of every row of `df`, fitted by [[kmeansFit]]
+    * on the driver and returned as a local relation. `df` is collected
+    * once and its rows sorted by the integral, unique `idCol`, so the
+    * labels do not depend on how `df` is partitioned; a NULL feature
+    * reads as 0.0 (what sklearn's StandardScaler gives a constant
+    * column, whose z-score is NULL here).
+    *
+    * Scale shape: the whole n×dim matrix lives on the driver (8 bytes a
+    * value) and the fit is O(restarts × rounds × n × k × dim) on one
+    * driver thread: milliseconds at sf0.01's 2k parts, about 128 MB
+    * collected and tens of seconds at sf10's 2M. Only the fact-sized
+    * passes that derive `df` run distributed.
+    */
+  private[graft] def kmeansLocal(
+      df: DataFrame, featCols: Seq[String], idCol: String, k: Int): DataFrame = {
+    val rows = df.select(col(idCol) +: featCols.map(f => col(f).cast("double")): _*)
+      .collect().sortBy(_.getAs[Number](0).longValue)
+    val labels = kmeansFit(rows.map(r =>
+      Array.tabulate(featCols.length)(j => if (r.isNullAt(j + 1)) 0.0 else r.getDouble(j + 1))), k)
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.indices.map(i => Row(rows(i).get(0), labels(i))): _*),
+      StructType(Seq(df.schema(idCol), StructField("cluster", IntegerType, nullable = false))))
+  }
+
+  /** The canonical cluster id of each row of `x` (n rows of dim
+    * doubles): the lowest-inertia of [[FitRestarts]] k-means++ +
+    * Lloyd runs, drawn in turn from one seed-42 stream, relabeled like
+    * [[kmeansCanonical]] — size desc, then first-feature mean asc, then
+    * raw id. Deterministic in `x` and its row order.
+    */
+  private[graft] def kmeansFit(x: Array[Array[Double]], k: Int): Array[Int] = {
+    val n = x.length
+    if (n == 0) return Array.empty
+    val dim = x.head.length
+    def d2(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      var j = 0
+      while (j < dim) { val t = a(j) - b(j); s += t * t; j += 1 }
+      s
+    }
+    def nearest(p: Array[Double], c: Array[Array[Double]]): Int = {
+      var best = 0
+      var bd = d2(p, c(0))
+      var i = 1
+      while (i < c.length) { val t = d2(p, c(i)); if (t < bd) { bd = t; best = i }; i += 1 }
+      best
+    }
+    // sklearn's greedy k-means++: each new center is the best (lowest
+    // potential) of 2 + ln k candidates drawn with probability ∝ D²
+    def seed(rnd: java.util.Random): Array[Array[Double]] = {
+      val trials = 2 + math.log(k.toDouble).toInt
+      val c = new Array[Array[Double]](k)
+      c(0) = x(rnd.nextInt(n))
+      var closest = x.map(d2(_, c(0)))
+      var pot = closest.sum
+      for (ci <- 1 until k) {
+        val cum = closest.scanLeft(0.0)(_ + _).tail
+        val cands = Array.fill(trials) { // first row whose cumulative D² reaches r
+          val r = rnd.nextDouble() * pot
+          var lo = 0
+          var hi = n - 1
+          while (lo < hi) { val m = (lo + hi) >>> 1; if (cum(m) < r) lo = m + 1 else hi = m }
+          lo
+        }
+        val dists = cands.map(cand => Array.tabulate(n)(i => math.min(closest(i), d2(x(i), x(cand)))))
+        val pots = dists.map(_.sum)
+        val b = pots.indices.minBy(pots)
+        c(ci) = x(cands(b)); closest = dists(b); pot = pots(b)
+      }
+      c
+    }
+    def lloyd(c0: Array[Array[Double]]): (Array[Int], Double) = {
+      var c = c0
+      var lab = x.map(nearest(_, c))
+      var round = 0
+      var moved = true
+      while (moved && round < FitRounds) {
+        val sums = Array.fill(k)(new Array[Double](dim))
+        val cnt = new Array[Int](k)
+        for (i <- 0 until n) {
+          cnt(lab(i)) += 1
+          var j = 0
+          while (j < dim) { sums(lab(i))(j) += x(i)(j); j += 1 }
+        }
+        // an empty cluster keeps its centroid, as in lloydTrain and MLlib
+        val next = Array.tabulate(k)(ci => if (cnt(ci) > 0) sums(ci).map(_ / cnt(ci)) else c(ci))
+        moved = (0 until k).exists(ci => math.sqrt(d2(c(ci), next(ci))) > FitTol)
+        c = next
+        lab = x.map(nearest(_, c))
+        round += 1
+      }
+      (lab, (0 until n).map(i => d2(x(i), c(lab(i)))).sum)
+    }
+    val rnd = new java.util.Random(FitSeed)
+    val (raw, _) = Iterator.fill(FitRestarts)(lloyd(seed(rnd)))
+      .reduceLeft((a, b) => if (b._2 < a._2) b else a)
+    val size = new Array[Int](k)
+    val first = new Array[Double](k)
+    for (i <- 0 until n) { size(raw(i)) += 1; first(raw(i)) += x(i)(0) }
+    val order = (0 until k).sortBy(r => (-size(r), first(r) / size(r), r))(
+      Ordering.Tuple3(Ordering.Int, Ordering.Double.TotalOrdering, Ordering.Int))
+    val canon = new Array[Int](k)
+    order.zipWithIndex.foreach { case (r, i) => canon(r) = i }
+    raw.map(canon)
   }
 
   // ---------------------------------------------------------------

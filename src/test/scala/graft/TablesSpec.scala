@@ -1,15 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampType}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 /** [[Tables.read]] resolves a table's schema once per file fingerprint:
   * an unchanged file reads back without a Spark job, a rewritten one is
@@ -17,32 +10,6 @@ import org.scalatest.time.SpanSugar._
   * setting is never served under the other.
   */
 class TablesSpec extends SparkSpec {
-
-  private val Tag = "graft.spec.tables"
-
-  /** Runs `body` and counts the Spark jobs it submitted, as a
-    * SparkListener sees them. The listener bus is asynchronous but
-    * ordered, so a marker job after the body flushes it: once the
-    * marker is seen, every job of the body has been.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val id = java.util.UUID.randomUUID.toString
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, id)
-      val r = try body finally sc.setLocalProperty(Tag, null)
-      sc.setLocalProperty(Tag, s"$id-marker")
-      try spark.range(1).count() finally sc.setLocalProperty(Tag, null)
-      eventually(timeout(30.seconds)) { assert(seen.contains(s"$id-marker")) }
-      (r, seen.asScala.count(_ == id))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq

@@ -7,9 +7,10 @@
 #
 # The parent's committed files are exported (git archive) into a
 # temporary directory; the change side is the working tree this script
-# sits in. Each side runs its own tree's
-#   python3 perfbench/run.py --workload <workload> --seed <seed> --seconds 15 --trace 0
-# one after the other, the parent first on the 1st, 3rd, ... seed and
+# sits in. Each side runs tools/bench_ops.py in its own tree, which makes
+# the call `perfbench/run.py --workload <workload> --seed <seed>
+# --seconds 15 --trace 0` makes and also prints each op's time, one
+# side after the other, the parent first on the 1st, 3rd, ... seed and
 # the change first on the others, so a host that speeds up or slows down
 # during the session does not favour one side. Progress and every result
 # line go to stderr; stdout gets, per end-to-end metric of BENCHMARK.json,
@@ -22,6 +23,9 @@
 #   unresolved    neither, and one side's spread (IQR / median) exceeds
 #                 the bound
 #   within bound  otherwise
+# then, per op label, each side's median ms over the complete pairs (on
+# batch the cycle's steps: etl, clustering, each query), which shows
+# which step moved when host drift moves the totals.
 # A run that fails (non-zero exit, or failed ops) is reported and left
 # out of its pair. Needs SPARK_HOME; perfbench refuses to start beside
 # another JVM, so nothing else Spark may run meanwhile.
@@ -35,13 +39,15 @@ mkdir -p "$WORK/parent"
 git -C "$ROOT" archive "$REV" | tar -x -C "$WORK/parent"
 
 run() {  # run <side> <seed>: appends "<side> <seed> <result json>" to the results
-  local side=$1 seed=$2 tree line
+  local side=$1 seed=$2 tree line out
+  out="$WORK/$side-$seed.out"
   tree=$([ "$side" = parent ] && echo "$WORK/parent" || echo "$ROOT")
   echo "ab: $side seed=$seed" >&2
-  if line=$(cd "$tree" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$seed" \
-      --seconds 15 --trace 0 2> "$WORK/$side-$seed.log" | tail -1) && [ -n "$line" ]; then
+  if (cd "$tree" && python3 "$ROOT/tools/bench_ops.py" "$WORKLOAD" "$seed" \
+      > "$out" 2> "$WORK/$side-$seed.log") && line=$(grep -m1 '^{' "$out"); then
     echo "ab: $side seed=$seed $line" >&2
     echo "$side $seed $line" >> "$WORK/results"
+    grep '^op' "$out" | sed "s/^/$side\t$seed\t/" >> "$WORK/ops"
   else
     echo "ab: $side seed=$seed FAILED:" >&2
     tail -5 "$WORK/$side-$seed.log" >&2
@@ -54,14 +60,14 @@ for seed in "$@"; do
   else run change "$seed"; run parent "$seed"; fi
   i=$((i + 1))
 done
-touch "$WORK/results"
+touch "$WORK/results" "$WORK/ops"
 
-python3 - "$ROOT/BENCHMARK.json" "$WORK/results" "$WORKLOAD" <<'EOF'
+python3 - "$ROOT/BENCHMARK.json" "$WORK/results" "$WORK/ops" "$WORKLOAD" <<'EOF'
 import json
 import statistics
 import sys
 
-bench, results, workload = sys.argv[1:]
+bench, results, opsfile, workload = sys.argv[1:]
 runs = {"parent": {}, "change": {}}
 for line in open(results):
     side, seed, js = line.split(" ", 2)
@@ -106,4 +112,15 @@ for m in json.load(open(bench))["end_to_end"]:
     print(f"  parent median {pm:.4g} [q1 {pq1:.4g}, q3 {pq3:.4g}] runs {' '.join(f'{v:.4g}' for v in p)}")
     print(f"  change median {cm:.4g} [q1 {cq1:.4g}, q3 {cq3:.4g}] runs {' '.join(f'{v:.4g}' for v in c)}")
     print(f"  change/parent {ratio}; pairs won: change {wins_c}, parent {wins_p}, of {len(p)}")
+
+ops = {"parent": {}, "change": {}}
+for line in open(opsfile):
+    side, seed, _, ms, label = line.rstrip("\n").split("\t", 4)
+    if seed in seeds:
+        ops[side].setdefault(label, []).append(float(ms))
+med = lambda xs: f"{statistics.median(xs):.0f} (n={len(xs)})" if xs else "-"  # noqa: E731
+print("per-op median ms, slowest on the parent first:")
+for label in sorted(set(ops["parent"]) | set(ops["change"]),
+                    key=lambda l: -statistics.median(ops["parent"].get(l, [0.0]))):
+    print(f"  {label}: parent {med(ops['parent'].get(label, []))}, change {med(ops['change'].get(label, []))}")
 EOF
