@@ -996,45 +996,6 @@ object Graph {
     warmStart(nodes, basePr, edM, sizedOn = edB)
   }
 
-  /** INDEX MAINTENANCE — the verb that closes the q159 lifecycle:
-    * after a delivery is served, ADVANCE the standing index by
-    * committing the merged edge set and the warmed ranks as ONE new
-    * snapshot version (kind-discriminated rows under a single
-    * manifest, the IVF atomic-publish pattern — quantizer and
-    * postings can never tear apart, and neither can edges and ranks
-    * here). The advanced table is a SESSION table ([[graft.Scratch]]),
-    * deliberately NOT the cross-JVM [[graft.IndexStore]] base: the
-    * published base is the deterministic 90%-bucket build every JVM
-    * can re-derive, while advanced state is this deployment's own
-    * lineage — version n = base + n deliveries. Returns (tableDir,
-    * committed version). GraphSpec pins: read-back ranks ≡ the q159
-    * serve, read-back edges ≡ the merged edge set, and repeated
-    * advances land as new versions with every prior version readable.
-    */
-  private[graft] def advancePrIndex(
-      s: SparkSession, d: String, tableDir: String): Int = {
-    val (edDir, _) = basePrIndex(s, d)
-    val edB = Snapshots.read(s, edDir)
-    val dli = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-      .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 >= 90)
-    val edM = edB.unionByName(edgesOf(dli))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-    val ranks = incrementalPagerank(s, d)
-    val combined = edM.select(
-      lit("e").as("kind"), col("src"), col("dst"), col("w"),
-      lit(null).cast("long").as("part_id"), lit(null).cast("long").as("pr"))
-      .unionByName(ranks.select(
-        lit("r").as("kind"),
-        lit(null).cast("long").as("src"), lit(null).cast("long").as("dst"),
-        lit(null).cast("long").as("w"),
-        col("part_id"), col("pr_warm").cast("long").as("pr")))
-    // replace-style version: each advance is the FULL state (prior
-    // versions stay readable — snapshot commits never touch old files)
-    Snapshots.commit(combined, tableDir, replace = true,
-      meta = Map("advance_of" -> edDir))
-  }
-
   /** Oracle: replays index build + delivery merge + warm rounds
     * CTE-for-CTE, every iterated CTE materialized (see [[kcoreSql]]).
     */

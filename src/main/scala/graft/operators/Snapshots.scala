@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   * rename, which refuses an existing destination), so two committers
   * racing to the same version get exactly one winner — the loser
   * raises [[ConcurrentSnapshotException]] with nothing clobbered and
-  * its orphaned data files invisible (vacuum reclaims them). Callers
+  * its orphaned data files invisible to every reader. Callers
   * can pass `expected` (the version they based their read on) to
   * refuse even non-colliding lost-update writes, and
   * [[Snapshots.commitWithRetry]] re-reads + re-publishes on conflict —
@@ -521,9 +521,9 @@ object Snapshots {
     * BEFORE their now-unreferenced data files, so no surviving
     * manifest can ever name a deleted file; a crash mid-vacuum leaves
     * only orphan data files, which are invisible to every reader
-    * (garbage, not corruption — reclaiming files no manifest has EVER
-    * referenced is a separate orphan sweep by age, exactly as the
-    * production table formats split these verbs). Same single-writer
+    * (garbage, not corruption; files no manifest has ever referenced
+    * are not reclaimed here, since vacuum deletes only what a dropped
+    * manifest names). Same single-writer
     * assumption as [[commit]]; a reader pinned to a dropped version
     * loses it by design, so `keep` must cover the longest reader pin
     * window.
@@ -548,59 +548,6 @@ object Snapshots {
           throw new java.io.IOException(s"vacuum: could not delete $p")
       }
       (drop, dead.size)
-    }
-  }
-
-  /** Reclaim ORPHAN data files — files under `data/` that no manifest
-    * (of any version) references: the residue of a commit/merge/compact
-    * that crashed after writing data but before publishing its
-    * manifest. Orphans are invisible to every reader, so this is pure
-    * garbage collection; it is the age-based sweep the [[vacuum]] doc
-    * defers to, split into its own verb exactly as the production
-    * table formats do. Only files older than `olderThanMs` are
-    * deleted — the age guard is what makes the sweep safe to run
-    * concurrently with a writer: an in-flight commit's files are
-    * always younger than any sane threshold, so the sweep can never
-    * eat a batch that is about to be published. Returns the deleted
-    * file count.
-    */
-  def sweepOrphans(spark: SparkSession, tableDir: String, olderThanMs: Long): Int = {
-    val table = new Path(tableDir)
-    val f = fs(spark, table)
-    val dataRoot = new Path(table, DataDir)
-    if (!f.exists(dataRoot)) 0
-    else {
-      val referenced = versions(spark, tableDir)
-        .flatMap(v => fileLines(readManifest(spark, table, v))).toSet
-      val cutoff = System.currentTimeMillis() - olderThanMs
-      var deleted = 0
-      f.listStatus(dataRoot).foreach { batchDir =>
-        if (batchDir.isDirectory) {
-          val entries = f.listStatus(batchDir.getPath).toSeq
-          val (parquet, markers) = entries.partition(_.getPath.getName.endsWith(".parquet"))
-          val live = parquet.exists(st =>
-            referenced.contains(s"$DataDir/${batchDir.getPath.getName}/${st.getPath.getName}"))
-          parquet.foreach { st =>
-            val rel = s"$DataDir/${batchDir.getPath.getName}/${st.getPath.getName}"
-            if (!referenced.contains(rel) && st.getModificationTime < cutoff) {
-              if (!f.delete(st.getPath, false))
-                throw new java.io.IOException(s"orphan sweep: could not delete ${st.getPath}")
-              deleted += 1
-            }
-          }
-          // a batch dir with no live file left is itself garbage,
-          // write markers (_SUCCESS, checksums) included; markers in a
-          // LIVE dir stay — they belong to published files
-          val remaining = f.listStatus(batchDir.getPath)
-            .count(_.getPath.getName.endsWith(".parquet"))
-          if (!live && remaining == 0 && markers.forall(_.getModificationTime < cutoff)) {
-            if (!f.delete(batchDir.getPath, true))
-              throw new java.io.IOException(
-                s"orphan sweep: could not remove dead ${batchDir.getPath}")
-          }
-        }
-      }
-      deleted
     }
   }
 
@@ -661,8 +608,7 @@ object Snapshots {
   def merge(
       updates: DataFrame,
       tableDir: String,
-      keyCols: Seq[String],
-      meta: Map[String, String] = Map.empty): Int = {
+      keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.{col, count, lit}
     val schema = tableSchema(updates.sparkSession, tableDir).getOrElse(updates.schema)
     require(updates.columns.sorted.sameElements(schema.fieldNames.sorted),
@@ -674,7 +620,7 @@ object Snapshots {
       u.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).isEmpty,
       "merge: updates carry duplicate keys — one row per key (multi-match MERGE is ambiguous)")
-    rewriteByKeys(u.select(keyCols.map(col): _*), u, tableDir, keyCols, schema, meta, "merge")
+    rewriteByKeys(u.select(keyCols.map(col): _*), u, tableDir, keyCols, schema, "merge")
   }
 
   /** DELETE by key as a snapshot commit — same file-granular
@@ -686,8 +632,7 @@ object Snapshots {
   def delete(
       keys: DataFrame,
       tableDir: String,
-      keyCols: Seq[String],
-      meta: Map[String, String] = Map.empty): Int = {
+      keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
     val spark = keys.sparkSession
     val schema = tableSchema(spark, tableDir).getOrElse(
@@ -695,7 +640,7 @@ object Snapshots {
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     rewriteByKeys(
       keys.select(keyCols.map(col): _*).distinct().localCheckpoint(true),
-      empty, tableDir, keyCols, schema, meta, "delete")
+      empty, tableDir, keyCols, schema, "delete")
   }
 
   /** Keyed change-data-feed between two committed versions — the Delta
@@ -788,14 +733,9 @@ object Snapshots {
       tableDir: String,
       keyCols: Seq[String],
       schema: StructType,
-      meta: Map[String, String],
       op: String): Int = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keyCols.nonEmpty, s"$op needs at least one key column")
-    meta.foreach { case (k, v) =>
-      require(!k.contains('=') && (k + v).forall(c => c != '\n' && c != '\r'),
-        s"snapshot meta must be line-safe and '='-free in keys: $k=$v")
-    }
     val spark = affectedKeys.sparkSession
     val table = new Path(tableDir)
     val f = fs(spark, table)
@@ -830,9 +770,9 @@ object Snapshots {
       .filter(_.getName.endsWith(".parquet"))
       .map(p => s"$DataDir/$batch/${p.getName}")
       .sorted
-    val fullMeta = carriedMeta(spark, tableDir, prev, meta) ++ meta
     val header = (SchemaPrefix + schema.json) +:
-      (fullMeta + ("_op" -> op)).toSeq.sorted.map { case (k, mv) => s"$MetaPrefix$k=$mv" }
+      (carriedMeta(spark, tableDir, prev, Map.empty) + ("_op" -> op))
+        .toSeq.sorted.map { case (k, mv) => s"$MetaPrefix$k=$mv" }
     // zone maps of UNTOUCHED files stay valid — carry them; the
     // rewritten files get none (fallback = always read, never wrong)
     val keptSet = kept.toSet

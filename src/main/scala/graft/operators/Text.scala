@@ -1608,7 +1608,6 @@ object Text {
       (s, d) => {
         def cnt(pat: String): Column =
           size(regexp_extract_all(col("text"), lit(pat), lit(0)))
-        val dec = org.apache.spark.sql.types.DecimalType(38, 0)
         val base = Tables.documents(s, d)
           .select(
             col("doc_id"), col("lang"),

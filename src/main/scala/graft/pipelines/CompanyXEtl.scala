@@ -123,104 +123,4 @@ object CompanyXEtl {
       "DimProductPriceCostHistory" -> dimPpch,
       "FactProductSales" -> fact)
   }
-
-  /** The notebook-variant extended inputs
-    * (`notebooks/etl_transform.ipynb` cells 16-17).
-    */
-  final case class NotebookSources(
-      customer: DataFrame, // CustomerID, PersonID, StoreID, TerritoryID
-      territory: DataFrame // TerritoryID, Name
-  )
-
-  /** The notebook-variant warehouse (`notebooks/etl_transform.ipynb`
-    * cells 22-28) — extended scope beyond the authoritative `.py`
-    * pipeline (SURVEY §1.4), with three deliberate semantic
-    * differences from [[build]], all notebook-faithful:
-    *
-    *  1. history gets a PER-ROW `HistoryKey` surrogate (cell 22) and
-    *     the fact resolves intervals PER PRODUCT against it (cell 28:
-    *     merge on ProductID + containment) — not against the global
-    *     interval dim. A salable product with no history therefore
-    *     does NOT reach this fact (the `.py` path keeps it);
-    *  2. `DimCustomer`/`DimTerritory` are source pass-throughs
-    *     (cell 24) — 19,820 / 10 rows at reference scale, 19,119
-    *     non-null PersonID (BASELINE.md invariant);
-    *  3. `DimDate` is a CALENDAR dim over distinct order dates with
-    *     month/quarter/year (cell 26; 1,124 rows at reference scale),
-    *     not the interval dim.
-    *
-    * Scale notes: HistoryKey's unpartitioned surrogate window carries
-    * the standard waiver — price/cost history is dimension-sized (395
-    * rows at reference scale; numbered by deterministic sort, F17
-    * policy, where the notebook numbers by input order). The per-
-    * product interval assignment is the J5 as-of shape: sort-merge on
-    * the ProductID key via [[AsOf.backward]] + containment post-filter
-    * — per-product intervals never overlap, so backward-latest +
-    * `OrderDate <= EndDate` equals the notebook's join-then-filter
-    * without the interval fan-out. The calendar dim aggregates before
-    * its surrogate window (pinned pattern, PlanSpec q31).
-    */
-  def buildNotebook(src: Sources, nb: NotebookSources): Map[String, DataFrame] = {
-    val base = build(src)
-
-    // cell 22: salable-filtered paired history, per-row surrogate
-    val salable = src.product.filter(col("FinishedGoodsFlag")).select(col("ProductID"))
-    val cost = src.costHistory
-    val lph = src.listPriceHistory
-    val history = cost
-      .join(
-        lph,
-        cost("ProductID") === lph("ProductID") &&
-          cost("StartDate") === lph("StartDate") &&
-          cost("EndDate") <=> lph("EndDate"),
-        "inner")
-      .select(
-        cost("ProductID"), cost("StartDate"), cost("EndDate"),
-        cost("StandardCost"), lph("ListPrice"))
-      .join(salable, Seq("ProductID"), "left_semi")
-    // global window waiver: paired price/cost history is dimension-sized
-    val dimPriceCost = history.withColumn(
-      "HistoryKey",
-      row_number().over(Window.orderBy(col("ProductID"), col("StartDate"))).cast(IntegerType))
-      .select(
-        col("HistoryKey"), col("ProductID"), col("StartDate"), col("EndDate"),
-        col("StandardCost"), col("ListPrice"))
-
-    // cell 26: calendar dim over distinct order dates (reference data
-    // carries no headerless detail, so no null date row exists there;
-    // we drop the null the golden fixture's headerless edge would add)
-    val dimTime = src.orderDetail
-      .join(src.orderHeader.select(col("SalesOrderID"), col("OrderDate")), Seq("SalesOrderID"), "left")
-      .select(col("OrderDate").as("date"))
-      .filter(col("date").isNotNull)
-      .distinct()
-      .select(
-        col("date"),
-        month(col("date")).as("month"),
-        quarter(col("date")).as("quarter"),
-        year(col("date")).as("year"))
-
-    // cell 28: per-product interval assignment against the HistoryKey
-    // dim — J5 as-of backward on the ProductID key + containment
-    val sod = src.orderDetail
-      .join(src.orderHeader.select(col("SalesOrderID"), col("OrderDate"), col("CustomerID")),
-        Seq("SalesOrderID"), "left")
-    val assigned = AsOf.backward(
-      sod, dimPriceCost.select(col("ProductID"), col("StartDate"), col("EndDate"), col("HistoryKey")),
-      leftTime = "OrderDate", rightTime = "StartDate",
-      by = Seq("ProductID"), rightPayload = Seq("HistoryKey", "StartDate", "EndDate"))
-    val factNb = assigned
-      .filter(
-        col("HistoryKey").isNotNull &&
-          (col("EndDate").isNull || col("OrderDate") <= col("EndDate")))
-      .withColumn("OrderQty", coalesce(col("OrderQty"), lit(0)))
-      .drop("StartDate", "EndDate")
-
-    base ++ Map(
-      "DimCustomer" -> nb.customer,
-      "DimTerritory" -> nb.territory,
-      "DimPriceCostHistory" -> dimPriceCost,
-      "DimDateCalendar" -> dimTime,
-      "FactProductSalesNotebook" -> factNb)
-  }
 }

@@ -87,79 +87,4 @@ object SnapshotSink {
       .start()
     q.awaitTermination()
   }
-
-  /** Idempotent micro-batch CDC apply: reduce the batch to its LATEST
-    * change per key (greatest `seqCol`, change-log order), then apply
-    * upserts and deletes through the file-granular [[Snapshots.merge]] /
-    * [[Snapshots.delete]] rewrites, recording the batch id exactly like
-    * [[appendOnce]]. `opCol` rows equal to `deleteOp` drop the key;
-    * everything else upserts the row (op/seq columns are not stored).
-    * Re-delivered batch → recognized id → no-op, so the crash windows
-    * are covered the same way as the append sink; batches are applied
-    * in id order by the foreachBatch contract, which is what makes
-    * last-change-wins correct across batches, not just within one.
-    * Returns true when the batch changed the table.
-    */
-  def applyCdcOnce(
-      batch: DataFrame,
-      tableDir: String,
-      keyCols: Seq[String],
-      seqCol: String,
-      opCol: String,
-      batchId: Long,
-      deleteOp: String = "d"): Boolean = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.{col, row_number}
-    val fresh = !lastBatchId(batch.sparkSession, tableDir).exists(_ >= batchId)
-    if (fresh) {
-      val latest = batch
-        .withColumn(
-          "_cdc_rn",
-          row_number().over(
-            Window.partitionBy(keyCols.map(col): _*)
-              .orderBy(col(seqCol).desc, col(opCol))))
-        .filter(col("_cdc_rn") === 1)
-        .drop("_cdc_rn")
-        .localCheckpoint(true)
-      val meta = Map(BatchKey -> batchId.toString)
-      val dels = latest.filter(col(opCol) === deleteOp).select(keyCols.map(col): _*)
-      val ups = latest.filter(col(opCol) =!= deleteOp).drop(seqCol, opCol)
-      // one version per non-empty phase; a batch carrying both deletes
-      // and upserts lands as two commits, the LAST carrying the batch
-      // id — a crash between them replays the whole batch, and the
-      // replayed delete/upsert rewrites are content-idempotent
-      if (!dels.isEmpty) Snapshots.delete(
-        dels, tableDir, keyCols,
-        meta = if (ups.isEmpty) meta else Map.empty)
-      if (!ups.isEmpty) Snapshots.merge(ups, tableDir, keyCols, meta = meta)
-      else if (dels.isEmpty)
-        // an empty batch still records its id so replay stays cheap
-        Snapshots.commit(
-          Snapshots.read(batch.sparkSession, tableDir).limit(0), tableDir, meta = meta)
-    }
-    fresh
-  }
-
-  /** Drain a change-log stream into `tableDir` with exactly-once final
-    * contents: `foreachBatch` → [[applyCdcOnce]] under
-    * `Trigger.AvailableNow`. The streaming twin of the q124-q126 CDC
-    * read surface — this is the APPLY side a warehouse needs to keep a
-    * mirror table current from a change feed.
-    */
-  def applyCdc(
-      stream: DataFrame,
-      tableDir: String,
-      keyCols: Seq[String],
-      seqCol: String,
-      opCol: String,
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((b: DataFrame, id: Long) =>
-        { applyCdcOnce(b, tableDir, keyCols, seqCol, opCol, id); () })
-      .start()
-    q.awaitTermination()
-  }
 }

@@ -84,18 +84,6 @@ class GoldenEtlSpec extends SparkSpec {
 
   private lazy val wh: Map[String, DataFrame] = CompanyXEtl.build(srcs)
 
-  // notebook-variant extended inputs (cells 16-17): one customer with
-  // null PersonID (store-only) and one store-less person customer
-  private lazy val nbWh: Map[String, DataFrame] = {
-    val customer = Seq(
-      (1001, Option(1), Option.empty[Int], 7),
-      (1002, Option.empty[Int], Option(31), 8),
-      (1003, Option(2), Option.empty[Int], 7)
-    ).toDF("CustomerID", "PersonID", "StoreID", "TerritoryID")
-    val territory = Seq((7, "Northwest"), (8, "Southwest")).toDF("TerritoryID", "Name")
-    CompanyXEtl.buildNotebook(srcs, CompanyXEtl.NotebookSources(customer, territory))
-  }
-
   test("golden counts: every ETL stage drops exactly the rows it should") {
     assert(wh("DimProduct").count() == 5, "6 source products, 1 non-salable")
     assert(wh("DimProduct").filter(col("ProductID") === 5).count() == 0)
@@ -126,45 +114,5 @@ class GoldenEtlSpec extends SparkSpec {
     assert(fact.filter(col("ProductID") === 1 && col("SalesOrderID") === 101).count() == 2)
     assert(fact.filter(col("ProductID") === 1)
       .agg(countDistinct(col("SalesOrderID"))).collect().head.getLong(0) == 2)
-  }
-
-  test("notebook dims: customer/territory pass through, HistoryKey numbers the history") {
-    assert(nbWh("DimCustomer").count() == 3)
-    assert(nbWh("DimCustomer").filter(col("PersonID").isNotNull).count() == 2,
-      "PersonID nullability must survive the pass-through (19,119-of-19,820 invariant)")
-    assert(nbWh("DimTerritory").count() == 2)
-    // per-row surrogate over the 7 salable paired history rows,
-    // numbered by the deterministic (ProductID, StartDate) sort
-    val hk = nbWh("DimPriceCostHistory").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getTimestamp(2).toString.take(10))).toSet
-    assert(hk == Set(
-      (1, 1, I1s), (2, 1, I2s), (3, 1, I3s),
-      (4, 2, I3s),
-      (5, 3, I1s),
-      (6, 6, I1s), (7, 6, I2s)), s"HistoryKey numbering wrong: $hk")
-  }
-
-  test("notebook calendar dim: distinct non-null order dates with date parts") {
-    val cal = nbWh("DimDateCalendar")
-    assert(cal.count() == 6, "6 headers with distinct dates; headerless detail adds no null row")
-    val row = cal.filter(col("date") === "2013-07-01").collect().head
-    assert(row.getInt(1) == 7 && row.getInt(2) == 3 && row.getInt(3) == 2013,
-      "month/quarter/year parts wrong")
-  }
-
-  test("notebook fact: per-product interval assignment, no-history product drops") {
-    val fact = nbWh("FactProductSalesNotebook")
-    val got = fact.select(col("SalesOrderID"), col("ProductID"), col("HistoryKey"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
-    // the deliberate divergence from the .py path: P4 (salable, no
-    // history) reaches build()'s fact via the GLOBAL interval dim but
-    // NOT this one — cell 28 resolves intervals per product
-    assert(got == Seq(
-      (101, 1, 1), (101, 1, 1), // both lines of the multi-line order -> P1's I1
-      (102, 3, 5), // end-boundary containment -> P3's only interval
-      (103, 1, 2), // start boundary -> P1's I2
-      (104, 2, 4) // open-ended interval -> P2's I3
-    ), s"notebook fact assignment wrong: $got")
-    assert(!got.exists(_._2 == 4), "no-history P4 must not reach the notebook fact")
   }
 }

@@ -682,48 +682,4 @@ class GraphSpec extends SparkSpec {
       "pr ranks part diverges")
     spark.catalog.clearCache()
   }
-
-  /** The maintenance verb closing the q159 lifecycle: the advanced
-    * version's ranks/edges must equal exactly what the serve computed,
-    * the two parts land under ONE manifest (atomic — no torn
-    * edges-without-ranks state), and every prior version stays
-    * readable after another advance.
-    */
-  test("advancePrIndex commits the merged graph + warmed ranks atomically; prior versions stay readable") {
-    val d = sf("sf0.001")
-    val dir = Scratch.fresh("adv_pr_")
-    val v1 = Graph.advancePrIndex(spark, d, dir)
-    assert(v1 == 1)
-    val adv = operators.Snapshots.read(spark, dir, Some(v1)).cache()
-    // ranks part ≡ the q159 serve
-    val served = Graph.incrementalPagerank(spark, d)
-      .select(col("part_id"), col("pr_warm")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(adv.filter(col("kind") === "r")
-      .select(col("part_id"), col("pr")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq == served,
-      "advanced ranks must equal the delivery serve")
-    // edges part ≡ the merged edge set (base ∪ delta, weights summed)
-    val (edDir, _) = Graph.basePrIndex(spark, d)
-    val dli = Tables.lineitem(spark, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-      .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 >= 90)
-    val merged = operators.Snapshots.read(spark, edDir)
-      .unionByName(Graph.edgesOf(dli))
-      .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(adv.filter(col("kind") === "e")
-      .select(col("src"), col("dst"), col("w")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq == merged,
-      "advanced edges must equal the merged edge set")
-    // lineage: a second advance is a NEW version; v1 stays readable
-    val v2 = Graph.advancePrIndex(spark, d, dir)
-    assert(v2 == 2)
-    assert(operators.Snapshots.read(spark, dir, Some(v1))
-      .filter(col("kind") === "r").count()
-      == operators.Snapshots.read(spark, dir, Some(v2))
-        .filter(col("kind") === "r").count(),
-      "prior advanced version must stay readable with its full rank set")
-    spark.catalog.clearCache()
-  }
 }

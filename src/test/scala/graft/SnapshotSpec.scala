@@ -345,28 +345,6 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotSink.lastBatchId(spark, dir).contains(0L))
   }
 
-  test("orphan sweep deletes only aged unreferenced files; live data and young writes survive") {
-    val dir = newTable()
-    Snapshots.commit((1 to 50).toDF("id"), dir)
-    // simulate a torn commit: data files on disk, no manifest names them
-    val orphanDir = java.nio.file.Paths.get(dir, "data", "deadbeef")
-    (10 to 11).toDF("id").write.parquet(orphanDir.toString)
-    val orphanParquet = java.nio.file.Files.list(orphanDir).toArray
-      .map(_.asInstanceOf[java.nio.file.Path])
-      .filter(_.toString.endsWith(".parquet"))
-    assert(orphanParquet.nonEmpty)
-    // young orphans are protected by the age guard (in-flight commit)
-    assert(Snapshots.sweepOrphans(spark, dir, olderThanMs = 3600 * 1000L) == 0)
-    assert(java.nio.file.Files.exists(orphanDir))
-    // aged orphans go; the dead batch dir goes with them
-    val swept = Snapshots.sweepOrphans(spark, dir, olderThanMs = 0L)
-    assert(swept == orphanParquet.length, s"expected ${orphanParquet.length} deletions, got $swept")
-    assert(!java.nio.file.Files.exists(orphanDir), "dead batch dir must be removed")
-    // published data is untouched and still reads
-    assert(Snapshots.read(spark, dir).count() == 50)
-    assert(Snapshots.sweepOrphans(spark, dir, 0L) == 0, "sweep is idempotent")
-  }
-
   test("history describes every version: op, file count, read footprint, metadata") {
     val dir = newTable()
     Snapshots.commit((1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "tag"), dir)

@@ -185,67 +185,6 @@ class StreamingSpec extends SparkSpec {
       "final table must equal the batch answer, each row exactly once")
   }
 
-  test("streaming CDC apply: last change per key wins, deletes land, crash replay is a no-op") {
-    import graft.operators.Snapshots
-    import graft.streaming.SnapshotSink
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc")
-    val table = dir.resolve("table").toString
-    val ckpt = dir.resolve("ckpt").toString
-    Snapshots.commit(
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag"), table)
-    // three change-log slices, one per micro-batch (mtime-ordered)
-    val slices = Seq(
-      Seq((2L, "b1", 1L, "u"), (4L, "d", 2L, "u")),            // update + insert
-      Seq((1L, "", 3L, "d"), (4L, "d1", 4L, "u")),             // delete + update
-      Seq((5L, "x", 5L, "u"), (5L, "x2", 6L, "u"), (4L, "", 7L, "d")) // within-batch last-wins + delete
-    )
-    slices.zipWithIndex.foreach { case (rows, i) =>
-      val build = dir.resolve(s"build_$i")
-      rows.toDF("id", "tag", "seq", "op").coalesce(1).write.parquet(build.toString)
-      val part = java.nio.file.Files.list(build).toArray
-        .map(_.asInstanceOf[java.nio.file.Path])
-        .find(_.getFileName.toString.endsWith(".parquet")).get
-      val target = dir.resolve(s"s$i.parquet")
-      java.nio.file.Files.move(part, target)
-      target.toFile.setLastModified(1000000L * (i + 1))
-    }
-    def feed() = spark.readStream
-      .schema("id LONG, tag STRING, seq LONG, op STRING")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir.toString + "/s*.parquet")
-    // run 1: apply batch 0, then die before its checkpoint marker
-    val failing = feed().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        SnapshotSink.applyCdcOnce(b, table, Seq("id"), "seq", "op", id)
-        if (id == 0) throw new RuntimeException("injected crash")
-        ()
-      }
-      .start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      failing.awaitTermination()
-    }
-    assert(SnapshotSink.lastBatchId(spark, table).contains(0L),
-      "batch 0 must be durable before the crash")
-    val versionsAfterCrash = Snapshots.versions(spark, table).size
-    // run 2, same checkpoint: batch 0 re-delivered → recognized, no new
-    // version from it; batches 1 and 2 land
-    SnapshotSink.applyCdc(feed(), table, Seq("id"), "seq", "op", ckpt)
-    assert(SnapshotSink.lastBatchId(spark, table).contains(2L))
-    val out = Snapshots.read(spark, table).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out == Map(2L -> "b1", 3L -> "c", 5L -> "x2"),
-      s"CDC final state wrong: $out")
-    // replaying the whole drained stream once more changes nothing
-    SnapshotSink.applyCdc(feed(), table, Seq("id"), "seq", "op", ckpt)
-    assert(Snapshots.read(spark, table).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap == out)
-    assert(versionsAfterCrash >= 2, "initial commit + batch 0 apply")
-  }
-
   test("streaming CMS accumulates across micro-batches with state bounded at depth x width") {
     import org.apache.spark.sql.functions._
     // 3 time-slice files, one micro-batch each: the final cells must

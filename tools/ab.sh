@@ -15,7 +15,10 @@
 # during the session does not favour one side. Progress and every result
 # line go to stderr; stdout gets, per end-to-end metric of BENCHMARK.json,
 # each side's runs, median and quartiles, the pairs each side won (ties
-# count for neither) and a verdict:
+# count for neither), the median and quartiles of the per-pair ratio
+# change/parent (both runs of a pair share a seed and a stretch of host
+# time, so drift that moves both sides leaves the ratio alone) and a
+# verdict:
 #   gain          the change won >= 9/10 of the pairs and its median is
 #                 better by more than the parent's interquartile range
 #   worse         the change's median is worse than the parent's by more
@@ -112,6 +115,10 @@ for m in json.load(open(bench))["end_to_end"]:
     print(f"  parent median {pm:.4g} [q1 {pq1:.4g}, q3 {pq3:.4g}] runs {' '.join(f'{v:.4g}' for v in p)}")
     print(f"  change median {cm:.4g} [q1 {cq1:.4g}, q3 {cq3:.4g}] runs {' '.join(f'{v:.4g}' for v in c)}")
     print(f"  change/parent {ratio}; pairs won: change {wins_c}, parent {wins_p}, of {len(p)}")
+    pair = [b / a for a, b in zip(p, c) if a]
+    if pair:
+        rq1, rm, rq3 = quart(pair)
+        print(f"  per-pair change/parent median {rm:.3f} [q1 {rq1:.3f}, q3 {rq3:.3f}] over {len(pair)} pairs")
 
 ops = {"parent": {}, "change": {}}
 for line in open(opsfile):
