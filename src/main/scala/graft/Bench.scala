@@ -215,15 +215,7 @@ object Bench {
       if (prebuildWanted(nm) && remainingSec > budgetSec / 2) {
         val t0 = System.nanoTime()
         try {
-          // built vs reused audits the JVM layer: "reused" means
-          // something in THIS session already forced the artifact
-          // (e.g. the sf0.001 warmup for the same dataset). Since
-          // round 13 the graph indexes ALSO publish cross-JVM via
-          // IndexStore — a "built" here may still serve a prior
-          // session's published artifact; IndexStore logs that
-          // distinction itself ("[index] … reused/built+published"),
-          // and staleness is structurally impossible (fingerprint-
-          // keyed paths + the GraphSpec served≡inline parity pin)
+          // built vs reused is what IndexStore did during this call
           val status = Prebuild.force(nm, build, spark, sfDir)
           System.err.println(
             f"[bench] prebuilt $nm%-18s ${(System.nanoTime() - t0) / 1e9}%7.2fs  ($status @ $sfDir)")

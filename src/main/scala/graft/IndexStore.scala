@@ -32,6 +32,14 @@ import org.apache.spark.sql.SparkSession
   * sentinel, then returns the winner's publish — a race never
   * crashes a query.
   *
+  * The sentinel is the only record of a resolved index: accessors call
+  * resolve on every use, so each call fingerprints the sources (a
+  * regenerated dataset or a moved root gets a different dir, never an
+  * old one), reads the sentinel and touches the fp dir (keeping prune's
+  * last-use gate honest for long-lived JVMs). There is no single flight
+  * around `build`: concurrent cold resolves in one JVM take the same
+  * race path as two JVMs, and a build may resolve another index.
+  *
   * FORMAT-VERSION RULE: any change to an index's schema, content
   * derivation, or partitioning MUST bump the caller's `formatVersion`
   * — it is baked into the path, so old JVMs keep reading their layout
@@ -80,6 +88,11 @@ object IndexStore {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private def sentinelDir(base: String): String = base + "/_publish"
+
+  // publishes completed per thread; [[Prebuild.force]] diffs it
+  private val builds = ThreadLocal.withInitial[Long](() => 0L)
+
+  private[graft] def buildsOnThisThread: Long = builds.get
 
   /** Resolve the named multi-part index for dataset `d`.
     *
@@ -130,6 +143,7 @@ object IndexStore {
             versions.map { case (p, v) => s"part_$p" -> v.toString })
         System.err.println(
           f"[index] $name fp=$fp built+published in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+        builds.set(builds.get + 1)
         prune(s"$root/$name-v$formatVersion", keepFp = fp)
         versions.keys.map(p => p -> partDir(p)).toMap
       } catch {

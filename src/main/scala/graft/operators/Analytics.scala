@@ -845,15 +845,15 @@ object Analytics {
     // market-basket member of the incremental delivery family (q119
     // dedup / q130 neardup / q144 spans / q155 BM25 / q159 PageRank).
     // The standing corpus (90% md5 bucket of ORDERS) commits its
-    // UNFILTERED pair counts, item counts, and basket count as
-    // snapshot tables once per (JVM, dataset); each delivery (the 10%
-    // bucket) scans only itself, merges counts with one pair-sized
+    // UNFILTERED pair counts, item counts, and basket count as snapshot
+    // tables once per dataset, through IndexStore; each delivery (the
+    // 10% bucket) scans only itself, merges counts with one pair-sized
     // full-outer sum, and emits the merged top-50 rules. Orders live
     // whole in one bucket, so merged counts EQUAL a full recompute —
     // BasketSpec pins incremental == q161 column-for-column — and
     // cab_base rides along (0 for rules born in this delivery) so
-    // movers are visible. At 100 TB a delivery costs one delta
-    // basket build + one index-sized merge, never a corpus rescan.
+    // movers are visible. At 100 TB a delivery costs one delta basket
+    // build + one index-sized merge, never a corpus rescan.
     Q(
       "q162_incremental_basket_rules",
       (s, d) => incrementalBasketRules(s, d),
@@ -988,36 +988,33 @@ object Analytics {
       .filter(col("a") =!= col("bb"))
       .groupBy(col("a"), col("bb")).agg(count(lit(1)).as("cab"))
 
-  private val basketIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  /** The standing basket index, built ONCE per (JVM, dataset): pair
+  /** The standing basket index, built once per dataset, through
+    * [[graft.IndexStore]]: pair
     * counts kept UNFILTERED (min-support is applied after the merge —
     * an index that pre-filtered would silently lose rules that cross
     * the threshold only with delivery mass), item counts, and the
     * basket-count scalar, each a committed snapshot table.
     */
   private[graft] def basketIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, String, String) =
-    basketIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "basket_index", 1, d, Seq("lineitem.parquet")) {
-        dirOf =>
-          val b90 = baskets(s, d)
-            .filter(graft.functions.TextFns.h60(col("ok").cast("string")) % 100 < 90)
-            .distinct().cache()
-          val vs = Map(
-            "pairs" -> Snapshots.commit(pairCounts(b90), dirOf("pairs"), replace = true),
-            "items" -> Snapshots.commit(
-              b90.groupBy(col("pid")).agg(count(lit(1)).as("c")),
-              dirOf("items"), replace = true),
-            "n" -> Snapshots.commit(
-              b90.agg(countDistinct(col("ok")).as("n_orders")),
-              dirOf("n"), replace = true))
-          b90.unpersist()
-          vs
-      }
-      (parts("pairs"), parts("items"), parts("n"))
-    })
+      s: org.apache.spark.sql.SparkSession, d: String): (String, String, String) = {
+    val parts = graft.IndexStore.resolve(s, "basket_index", 1, d, Seq("lineitem.parquet")) {
+      dirOf =>
+        val b90 = baskets(s, d)
+          .filter(graft.functions.TextFns.h60(col("ok").cast("string")) % 100 < 90)
+          .distinct().cache()
+        val vs = Map(
+          "pairs" -> Snapshots.commit(pairCounts(b90), dirOf("pairs"), replace = true),
+          "items" -> Snapshots.commit(
+            b90.groupBy(col("pid")).agg(count(lit(1)).as("c")),
+            dirOf("items"), replace = true),
+          "n" -> Snapshots.commit(
+            b90.agg(countDistinct(col("ok")).as("n_orders")),
+            dirOf("n"), replace = true))
+        b90.unpersist()
+        vs
+    }
+    (parts("pairs"), parts("items"), parts("n"))
+  }
 
   private def incrementalBasketRules(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {

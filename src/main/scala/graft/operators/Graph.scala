@@ -79,18 +79,13 @@ object Graph {
     * still owns its partitioning. Lives in [[graft.IndexStore]]
     * (round 13): published once, REUSED across JVMs, staleness keyed
     * on the lineitem fingerprint — at 100 TB an edge derivation is an
-    * ETL-tier cost no deployment can pay per process. The JVM-level
-    * map only memoizes the resolved path.
+    * ETL-tier cost no deployment can pay per process.
     */
-  private val edgeTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def coEdges(s: SparkSession, d: String): DataFrame = {
-    val path = edgeTableCache.computeIfAbsent(d, _ =>
-      graft.IndexStore.resolve(s, "co_edges", 1, d, Seq("lineitem.parquet")) { dirOf =>
-        Map("edges" -> Snapshots.commit(
-          buildCoEdges(s, d).repartition(col("src")), dirOf("edges"), replace = true))
-      }("edges"))
+    val path = graft.IndexStore.resolve(s, "co_edges", 1, d, Seq("lineitem.parquet")) { dirOf =>
+      Map("edges" -> Snapshots.commit(
+        buildCoEdges(s, d).repartition(col("src")), dirOf("edges"), replace = true))
+    }("edges")
     Snapshots.read(s, path)
   }
 
@@ -950,31 +945,27 @@ object Graph {
     * edge-sized weight merge + [[WarmIters]] edge-linear rounds,
     * never a full-corpus rescan or a cold 5-round rerun.
     */
-  private val prIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def basePrIndex(s: SparkSession, d: String): (String, String) =
-    prIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "pr_index", 1, d, Seq("lineitem.parquet")) {
-        dirOf =>
-          val bli = Tables.lineitem(s, d)
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-            .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
-          val edB = edgesOf(bli).repartition(col("src")).cache()
-          val degB = edB.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-          val nodesB = bli.select(col("pid").as("part_id")).distinct()
-          val init = nodesB
-            .join(degB.withColumnRenamed("src", "part_id"), Seq("part_id"), "left")
-            .select(col("part_id"), coalesce(col("deg"), lit(0L)).as("deg"),
-              lit(1000000L).as("pr"))
-          val base = prIterate(init, edB, PrIters)
-          Map(
-            "edges" -> Snapshots.commit(edB, dirOf("edges"), replace = true),
-            "pr" -> Snapshots.commit(
-              base.select(col("part_id"), col("pr")), dirOf("pr"), replace = true))
-      }
-      (parts("edges"), parts("pr"))
-    })
+  private[graft] def basePrIndex(s: SparkSession, d: String): (String, String) = {
+    val parts = graft.IndexStore.resolve(s, "pr_index", 1, d, Seq("lineitem.parquet")) {
+      dirOf =>
+        val bli = Tables.lineitem(s, d)
+          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
+          .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
+        val edB = edgesOf(bli).repartition(col("src")).cache()
+        val degB = edB.groupBy(col("src")).agg(sum(col("w")).as("deg"))
+        val nodesB = bli.select(col("pid").as("part_id")).distinct()
+        val init = nodesB
+          .join(degB.withColumnRenamed("src", "part_id"), Seq("part_id"), "left")
+          .select(col("part_id"), coalesce(col("deg"), lit(0L)).as("deg"),
+            lit(1000000L).as("pr"))
+        val base = prIterate(init, edB, PrIters)
+        Map(
+          "edges" -> Snapshots.commit(edB, dirOf("edges"), replace = true),
+          "pr" -> Snapshots.commit(
+            base.select(col("part_id"), col("pr")), dirOf("pr"), replace = true))
+    }
+    (parts("edges"), parts("pr"))
+  }
 
   private[graft] def incrementalPagerank(s: SparkSession, d: String): DataFrame = {
     val (edDir, prDir) = basePrIndex(s, d)
@@ -1145,28 +1136,24 @@ object Graph {
     * as two snapshot tables (q159's first-run-pays-index lifecycle).
     * Serving reads the PINNED versions only.
     */
-  private val triIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def baseTriIndex(s: SparkSession, d: String): (String, String) =
-    triIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "tri_index", 1, d, Seq("lineitem.parquet")) {
-        dirOf =>
-          val bli = Tables.lineitem(s, d)
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-            .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
-          val undB = edgesOf(bli)
-            .filter(col("src") < col("dst"))
-            .select(col("src").as("u"), col("dst").as("v"))
-            .repartition(col("u"))
-            .cache()
-          val stats = trianglesOf(undB).select(col("n_edges"), col("n_triangles"))
-          Map(
-            "adj" -> Snapshots.commit(adjacencyArrays(undB), dirOf("adj"), replace = true),
-            "stats" -> Snapshots.commit(stats, dirOf("stats"), replace = true))
-      }
-      (parts("adj"), parts("stats"))
-    })
+  private[graft] def baseTriIndex(s: SparkSession, d: String): (String, String) = {
+    val parts = graft.IndexStore.resolve(s, "tri_index", 1, d, Seq("lineitem.parquet")) {
+      dirOf =>
+        val bli = Tables.lineitem(s, d)
+          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
+          .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
+        val undB = edgesOf(bli)
+          .filter(col("src") < col("dst"))
+          .select(col("src").as("u"), col("dst").as("v"))
+          .repartition(col("u"))
+          .cache()
+        val stats = trianglesOf(undB).select(col("n_edges"), col("n_triangles"))
+        Map(
+          "adj" -> Snapshots.commit(adjacencyArrays(undB), dirOf("adj"), replace = true),
+          "stats" -> Snapshots.commit(stats, dirOf("stats"), replace = true))
+    }
+    (parts("adj"), parts("stats"))
+  }
 
   private[graft] def incrementalTriangles(s: SparkSession, d: String): DataFrame = {
     val (arDir, stDir) = baseTriIndex(s, d)
@@ -1265,31 +1252,27 @@ object Graph {
 
   private[graft] val ClosureRounds = 5
 
-  private val coreIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Pinned (edge snapshot, core snapshot) of the 90% standing bucket
     * — first run pays the batch peel, every delivery reads it.
     */
-  private[graft] def baseCoreIndex(s: SparkSession, d: String): (String, String) =
-    coreIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "kcore_index", 1, d, Seq("lineitem.parquet")) {
-        dirOf =>
-          val bli = Tables.lineitem(s, d)
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-            .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
-          val undB = edgesOf(bli)
-            .filter(col("src") < col("dst"))
-            .select(col("src").as("u"), col("dst").as("v"))
-            .repartition(col("u"))
-            .cache()
-          val core = kcoreOf(undB)
-          Map(
-            "edges" -> Snapshots.commit(undB, dirOf("edges"), replace = true),
-            "core" -> Snapshots.commit(core, dirOf("core"), replace = true))
-      }
-      (parts("edges"), parts("core"))
-    })
+  private[graft] def baseCoreIndex(s: SparkSession, d: String): (String, String) = {
+    val parts = graft.IndexStore.resolve(s, "kcore_index", 1, d, Seq("lineitem.parquet")) {
+      dirOf =>
+        val bli = Tables.lineitem(s, d)
+          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
+          .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
+        val undB = edgesOf(bli)
+          .filter(col("src") < col("dst"))
+          .select(col("src").as("u"), col("dst").as("v"))
+          .repartition(col("u"))
+          .cache()
+        val core = kcoreOf(undB)
+        Map(
+          "edges" -> Snapshots.commit(undB, dirOf("edges"), replace = true),
+          "core" -> Snapshots.commit(core, dirOf("core"), replace = true))
+    }
+    (parts("edges"), parts("core"))
+  }
 
   /** One affected-closure expansion step: `aset` plus its neighbors
     * through `nonCoreEdges` — shared by the fixed-round expansion in
@@ -1688,31 +1671,27 @@ object Graph {
     * delta-induced quotient edges, a graph bounded by the DELTA's
     * edge count, not the corpus's.
     */
-  private val ccIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def baseCcIndex(s: SparkSession, d: String): (String, String) =
-    ccIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "cc_index", 1, d, Seq("lineitem.parquet")) {
-        dirOf =>
-          val bli = Tables.lineitem(s, d)
-            .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
-            .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
-          val undB = edgesOf(bli)
-            .filter(col("src") < col("dst"))
-            .select(col("src").as("u"), col("dst").as("v"))
-            .repartition(col("u"))
-            .cache()
-          val nodesB = bli.select(col("pid").as("part_id")).distinct()
-          val lblB = ccLabels(nodesB, undB, CcRounds)
-          Map(
-            "edges" -> Snapshots.commit(undB, dirOf("edges"), replace = true),
-            "cc" -> Snapshots.commit(
-              lblB.select(col("part_id"), col("lbl").as("comp")), dirOf("cc"),
-              replace = true))
-      }
-      (parts("edges"), parts("cc"))
-    })
+  private[graft] def baseCcIndex(s: SparkSession, d: String): (String, String) = {
+    val parts = graft.IndexStore.resolve(s, "cc_index", 1, d, Seq("lineitem.parquet")) {
+      dirOf =>
+        val bli = Tables.lineitem(s, d)
+          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pid"))
+          .filter(graft.functions.TextFns.h60(col("l_orderkey").cast("string")) % 100 < 90)
+        val undB = edgesOf(bli)
+          .filter(col("src") < col("dst"))
+          .select(col("src").as("u"), col("dst").as("v"))
+          .repartition(col("u"))
+          .cache()
+        val nodesB = bli.select(col("pid").as("part_id")).distinct()
+        val lblB = ccLabels(nodesB, undB, CcRounds)
+        Map(
+          "edges" -> Snapshots.commit(undB, dirOf("edges"), replace = true),
+          "cc" -> Snapshots.commit(
+            lblB.select(col("part_id"), col("lbl").as("comp")), dirOf("cc"),
+            replace = true))
+    }
+    (parts("edges"), parts("cc"))
+  }
 
   /** The merge core over explicit frames — the unit GraphSpec drives.
     * `ccB` is the PINNED base labeling (contract: converged — the

@@ -1167,31 +1167,27 @@ object MLOps {
       (6, None, Some(2), "brand", true, 0))
 
   /** The q185 end-to-end warehouse: EtlJob + deterministic
-    * ClusteringJob landed ONCE per (JVM, dataset) under [[graft.Scratch]]
+    * ClusteringJob landed once per dataset, through [[graft.IndexStore]]
     * — the composed `main.py -t etl` → `-t clustering` lifecycle whose
     * served tables the e2e gate hashes. Registered in
     * [[graft.Prebuild]] so bench timed runs measure the DSS serving
     * path while the pipeline cost stays visible on stderr.
     */
-  private val e2eWarehouseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def e2eWarehouse(s: SparkSession, d: String): String =
-    e2eWarehouseCache.computeIfAbsent(d, _ =>
-      graft.IndexStore.resolve(
-        s, "e2e_warehouse", 1, d,
-        Seq("lineitem.parquet", "orders.parquet", "part.parquet")) { dirOf =>
-        // the whole warehouse (star tables + product_clustering +
-        // ledgers) is ONE plain-dir part: the ETL writes its own
-        // multi-table layout, and the atomic rename publishes it all
-        // or nothing — no JVM can ever read a warehouse whose fact
-        // landed but whose clustering didn't
-        graft.IndexStore.publishPlainDir(dirOf("wh")) { tmp =>
-          graft.pipelines.EtlJob.run(s, d, tmp)
-          graft.pipelines.ClusteringJob.runDeterministic(s, d, tmp)
-        }
-        Map("wh" -> 0)
-      }("wh"))
+    graft.IndexStore.resolve(
+      s, "e2e_warehouse", 1, d,
+      Seq("lineitem.parquet", "orders.parquet", "part.parquet")) { dirOf =>
+      // the whole warehouse (star tables + product_clustering +
+      // ledgers) is ONE plain-dir part: the ETL writes its own
+      // multi-table layout, and the atomic rename publishes it all
+      // or nothing — no JVM can ever read a warehouse whose fact
+      // landed but whose clustering didn't
+      graft.IndexStore.publishPlainDir(dirOf("wh")) { tmp =>
+        graft.pipelines.EtlJob.run(s, d, tmp)
+        graft.pipelines.ClusteringJob.runDeterministic(s, d, tmp)
+      }
+      Map("wh" -> 0)
+    }("wh")
 
   /** MLlib KMeans (k-means|| init, seed 42); labels canonicalized by
     * (cluster size desc, first-feature centroid asc) so re-runs and
@@ -1383,38 +1379,34 @@ object MLOps {
     lloydAssignFrom(zs.sparkSession, zs, zFeats, cent0, k, LloydIters)
   }
 
-  /** Model-selection assignments for every candidate k, trained ONCE
-    * per (JVM, dataset) and persisted as a k-partitioned scratch
-    * table shared by the whole selection family (q163 elbow, q164
-    * CH, q166 ARI) — the production shape: a sweep trains each
-    * candidate once, then every validity index reads the SAME
+  /** Model-selection assignments for every candidate k, trained once
+    * per dataset, through [[graft.IndexStore]], and persisted as a
+    * k-partitioned table shared by the whole selection family (q163
+    * elbow, q164 CH, q166 ARI) — the production shape: a sweep trains
+    * each candidate once, then every validity index reads the SAME
     * persisted assignment, instead of each index re-running ~30
     * driver-sequenced Lloyd rounds (the [[graft.operators.Graph]]
-    * co-purchase edge table precedent). Parquet round-trips the
-    * double z coordinates bit-exactly, so downstream statistics are
-    * unchanged; per-k partition pruning keeps a consumer that wants
-    * a subset of ks (q166) from scanning the rest.
+    * co-purchase edge table precedent). Parquet round-trips the double
+    * z coordinates bit-exactly, so downstream statistics are unchanged;
+    * per-k partition pruning keeps a consumer that wants a subset of ks
+    * (q166) from scanning the rest.
     */
-  private val selectionCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def selectionLabels(s: SparkSession, d: String): DataFrame = {
-    val path = selectionCache.computeIfAbsent(d, _ =>
-      graft.IndexStore.resolve(
-        s, "selection_labels", 1, d, Seq("lineitem.parquet", "orders.parquet")) { dirOf =>
-        // plain-parquet part (partitionBy("k") pruning — a layout the
-        // snapshot format does not model), published via the
-        // write-to-temp + atomic-rename path; version 0 by convention
-        graft.IndexStore.publishPlainDir(dirOf("labels")) { tmp =>
-          val zFeats = MatrixFeatures.map(f => s"z_$f")
-          val zs = zscored(s, d).localCheckpoint(true)
-          ElbowKs.map(k => elbowLabeled(zs, zFeats, k)
-              .withColumn("k", lit(k).cast(IntegerType)))
-            .reduce(_.unionByName(_))
-            .write.partitionBy("k").parquet(tmp)
-        }
-        Map("labels" -> 0)
-      }("labels"))
+    val path = graft.IndexStore.resolve(
+      s, "selection_labels", 1, d, Seq("lineitem.parquet", "orders.parquet")) { dirOf =>
+      // plain-parquet part (partitionBy("k") pruning — a layout the
+      // snapshot format does not model), published via the
+      // write-to-temp + atomic-rename path; version 0 by convention
+      graft.IndexStore.publishPlainDir(dirOf("labels")) { tmp =>
+        val zFeats = MatrixFeatures.map(f => s"z_$f")
+        val zs = zscored(s, d).localCheckpoint(true)
+        ElbowKs.map(k => elbowLabeled(zs, zFeats, k)
+            .withColumn("k", lit(k).cast(IntegerType)))
+          .reduce(_.unionByName(_))
+          .write.partitionBy("k").parquet(tmp)
+      }
+      Map("labels" -> 0)
+    }("labels")
     s.read.parquet(path)
   }
 
@@ -1733,12 +1725,12 @@ object MLOps {
   // labels; new products must be scored against THAT model, not a
   // retrain). The standing corpus (90% md5 bucket of PARTS) trains
   // the fixed-iteration k=4 Lloyd (q56/q148 recipe, lowest-part_id
-  // seeds) and commits TWO snapshot tables once per (JVM, dataset):
-  // the z-normalization moments and the fitted centroids. Each
-  // delivery (the 10% bucket) computes features from a DELTA-FILTERED
-  // fact scan only (per-part feature independence makes the pushed
-  // l_partkey-bucket filter exact), z-scores with the PINNED standing
-  // moments — never its own, which would silently shift every
+  // seeds) and commits TWO snapshot tables once per dataset, through
+  // IndexStore: the z-normalization moments and the fitted centroids.
+  // Each delivery (the 10% bucket) computes features from a
+  // DELTA-FILTERED fact scan only (per-part feature independence makes
+  // the pushed l_partkey-bucket filter exact), z-scores with the PINNED
+  // standing moments — never its own, which would silently shift every
   // coordinate — and labels against the PINNED centroids: broadcast
   // k·dim scalars, one codegen'd argmin per row, zero shuffles, no
   // retrain, no corpus rescan. dist2_micro (squared z-distance to the
@@ -1751,42 +1743,38 @@ object MLOps {
   private def liPartBucket: Column =
     graft.functions.TextFns.h60(col("l_partkey").cast("string")) % 100
 
-  private val clusterModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, String)]()
-
-  /** The standing product-mix model, trained ONCE per (JVM, dataset)
-    * on the 90% part bucket: (z-stats snapshot dir, centroid snapshot
-    * dir, base cluster-histogram snapshot dir). The histogram — the
-    * standing corpus's own parts labeled under the final model, k
-    * rows — is what the q176 drift monitor compares deliveries
-    * against; committing it at train time keeps serving free of any
-    * standing-corpus rescan.
+  /** The standing product-mix model, trained once per dataset, through
+    * [[graft.IndexStore]], on the 90% part bucket: (z-stats snapshot
+    * dir, centroid snapshot dir, base cluster-histogram snapshot dir).
+    * The histogram — the standing corpus's own parts labeled under the
+    * final model, k rows — is what the q176 drift monitor compares
+    * deliveries against; committing it at train time keeps serving free
+    * of any standing-corpus rescan.
     */
-  private[graft] def clusterModel(s: SparkSession, d: String): (String, String, String) =
-    clusterModelCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(
-        s, "cluster_model", 1, d, Seq("lineitem.parquet", "orders.parquet")) { dirOf =>
-        val zFeats = MatrixFeatures.map(f => s"z_$f")
-        val f90 = featuresWhere(s, d, liPartBucket < 90).na.drop().cache()
-        val stats = f90.agg(zStatAggs.head, zStatAggs.tail: _*).localCheckpoint(true)
-        val z90 = zProject(f90, stats).localCheckpoint(true)
-        val seeds = z90.orderBy(col("part_id")).limit(ServeK)
-          .withColumn("rn", row_number().over(Window.orderBy(col("part_id"))))
-        val cent0Aggs = (0 until ServeK).flatMap(c => zFeats.map(f =>
-          max(when(col("rn") === c + 1, col(f))).as(s"c${c}_$f")))
-        val cent0 = seeds.groupBy().agg(cent0Aggs.head, cent0Aggs.tail: _*)
-        val centF = lloydTrain(s, z90, zFeats, cent0, ServeK, LloydIters)
-        val baseHist = nearestLabel(z90, zFeats, centF, ServeK)
-          .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
-        val vs = Map(
-          "stats" -> Snapshots.commit(stats, dirOf("stats"), replace = true),
-          "cent" -> Snapshots.commit(centF, dirOf("cent"), replace = true),
-          "hist" -> Snapshots.commit(baseHist, dirOf("hist"), replace = true))
-        f90.unpersist()
-        vs
-      }
-      (parts("stats"), parts("cent"), parts("hist"))
-    })
+  private[graft] def clusterModel(s: SparkSession, d: String): (String, String, String) = {
+    val parts = graft.IndexStore.resolve(
+      s, "cluster_model", 1, d, Seq("lineitem.parquet", "orders.parquet")) { dirOf =>
+      val zFeats = MatrixFeatures.map(f => s"z_$f")
+      val f90 = featuresWhere(s, d, liPartBucket < 90).na.drop().cache()
+      val stats = f90.agg(zStatAggs.head, zStatAggs.tail: _*).localCheckpoint(true)
+      val z90 = zProject(f90, stats).localCheckpoint(true)
+      val seeds = z90.orderBy(col("part_id")).limit(ServeK)
+        .withColumn("rn", row_number().over(Window.orderBy(col("part_id"))))
+      val cent0Aggs = (0 until ServeK).flatMap(c => zFeats.map(f =>
+        max(when(col("rn") === c + 1, col(f))).as(s"c${c}_$f")))
+      val cent0 = seeds.groupBy().agg(cent0Aggs.head, cent0Aggs.tail: _*)
+      val centF = lloydTrain(s, z90, zFeats, cent0, ServeK, LloydIters)
+      val baseHist = nearestLabel(z90, zFeats, centF, ServeK)
+        .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
+      val vs = Map(
+        "stats" -> Snapshots.commit(stats, dirOf("stats"), replace = true),
+        "cent" -> Snapshots.commit(centF, dirOf("cent"), replace = true),
+        "hist" -> Snapshots.commit(baseHist, dirOf("hist"), replace = true))
+      f90.unpersist()
+      vs
+    }
+    (parts("stats"), parts("cent"), parts("hist"))
+  }
 
   private[graft] def incrementalAssign(s: SparkSession, d: String): DataFrame = {
     val zFeats = MatrixFeatures.map(f => s"z_$f")
@@ -2420,9 +2408,9 @@ object MLOps {
     // quantity from FactSales). Every stage's output feeds the next
     // through parquet on disk, so the COMPOSED pipeline — not just
     // its stages — sits under the oracle hash (GoldenEtlSpec pins
-    // counts; this pins values). The warehouse builds once per
-    // (JVM, dataset) ([[e2eWarehouse]], in Prebuild): first run pays
-    // the ETL+clustering lifecycle, timed runs measure the DSS
+    // counts; this pins values). The warehouse builds once per dataset,
+    // through IndexStore ([[e2eWarehouse]], in Prebuild): first run
+    // pays the ETL+clustering lifecycle, timed runs measure the DSS
     // serving path — the q159 index lifecycle applied to the whole
     // pipeline.
     Q(

@@ -463,9 +463,6 @@ object Multimodal {
     graft.functions.TextFns.h60(
       concat(lit("d"), col("doc_id").cast("string"))) % 10 =!= 0
 
-  private val imageIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The FROZEN image-hash index (q206): the standing ~90% corpus's
     * dHash frame (doc_id, h0, h1, band0-3), computed ONCE through the
     * real codec path and published cross-JVM via [[graft.IndexStore]]
@@ -475,14 +472,12 @@ object Multimodal {
     * on the ~10% batch.
     */
   private[graft] def imageDhashIndex(s: SparkSession, d: String): String =
-    imageIndexCache.computeIfAbsent(d, _ => {
-      graft.IndexStore.resolve(s, "img_dhash_index", 1, d, Seq("documents.parquet")) {
-        dirOf =>
-          val standing = imageDhashOf(
-            Tables.documents(s, d).select(col("doc_id")).filter(imgStanding))
-          Map("hashes" -> Snapshots.commit(standing, dirOf("hashes"), replace = true))
-      }("hashes")
-    })
+    graft.IndexStore.resolve(s, "img_dhash_index", 1, d, Seq("documents.parquet")) {
+      dirOf =>
+        val standing = imageDhashOf(
+          Tables.documents(s, d).select(col("doc_id")).filter(imgStanding))
+        Map("hashes" -> Snapshots.commit(standing, dirOf("hashes"), replace = true))
+    }("hashes")
 
   /** Explode a hash frame into its 4 (band_id, band) rows. */
   private def bandRows(hd: DataFrame): DataFrame =

@@ -692,9 +692,6 @@ object Similarity {
     graft.functions.TextFns.h60(
       concat(lit("v"), col("vec_id").cast("string"))) % 10 =!= 0
 
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** The FROZEN PQ index (q196): codebook trained on the standing
     * bucket + the standing bucket's codes, committed once per dataset
     * and published cross-JVM via [[graft.IndexStore]] (Prebuild-
@@ -703,22 +700,18 @@ object Similarity {
     * amortizes; serving encodes only the delta against the pinned
     * codebook.
     */
-  private[graft] def pqIndex(s: SparkSession, d: String): (String, String) =
-    pqIndexCache.computeIfAbsent(d, _ => {
-      val parts = graft.IndexStore.resolve(s, "pq_index", 1, d, Seq("embeddings.parquet")) {
-        dirOf =>
-          val standingEl = pqElems(s, d).filter(pqStanding).cache()
-          val cent = pqTrain(standingEl)
-          Map(
-            "codebook" -> Snapshots.commit(cent, dirOf("codebook"), replace = true),
-            "codes" -> Snapshots.commit(
-              pqAssign(standingEl, cent), dirOf("codes"), replace = true))
-      }
-      (parts("codebook"), parts("codes"))
-    })
-
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, String]]()
+  private[graft] def pqIndex(s: SparkSession, d: String): (String, String) = {
+    val parts = graft.IndexStore.resolve(s, "pq_index", 1, d, Seq("embeddings.parquet")) {
+      dirOf =>
+        val standingEl = pqElems(s, d).filter(pqStanding).cache()
+        val cent = pqTrain(standingEl)
+        Map(
+          "codebook" -> Snapshots.commit(cent, dirOf("codebook"), replace = true),
+          "codes" -> Snapshots.commit(
+            pqAssign(standingEl, cent), dirOf("codes"), replace = true))
+    }
+    (parts("codebook"), parts("codes"))
+  }
 
   /** The FROZEN IVF-PQ index (q199 — faiss IVFADC's composition,
     * Jégou et al. 2011 §IV, on the existing pieces): ONE standing
@@ -739,28 +732,26 @@ object Similarity {
     * the whole two-layer index stays hash-gated.
     */
   private[graft] def ivfPqIndex(s: SparkSession, d: String): Map[String, String] =
-    ivfPqIndexCache.computeIfAbsent(d, _ => {
-      graft.IndexStore.resolve(s, "ivfpq_index", 1, d, Seq("embeddings.parquet")) {
-        dirOf =>
-          val sel = pqElems(s, d).filter(pqStanding).cache()
-          val init = Tables.embeddings(s, d)
-            .filter(pqStanding)
-            .select(col("vec_id"), (col("label") % IvfCells).cast(IntegerType).as("cell"))
-          // q76's training discipline on the standing bucket: init
-          // means -> argmax reassign -> refined means. Scoring only
-          // standing vectors during training equals the oracle's
-          // score-everyone-then-join-standing (assignment is per-vector)
-          val trained = ivfTrain(sel, init).localCheckpoint(true)
-          val cent = pqTrain(sel)
-          Map(
-            "ivf_cent" -> Snapshots.commit(trained, dirOf("ivf_cent"), replace = true),
-            "ivf_cells" -> Snapshots.commit(
-              ivfAssignCells(sel, trained), dirOf("ivf_cells"), replace = true),
-            "codebook" -> Snapshots.commit(cent, dirOf("codebook"), replace = true),
-            "codes" -> Snapshots.commit(
-              pqAssign(sel, cent), dirOf("codes"), replace = true))
-      }
-    })
+    graft.IndexStore.resolve(s, "ivfpq_index", 1, d, Seq("embeddings.parquet")) {
+      dirOf =>
+        val sel = pqElems(s, d).filter(pqStanding).cache()
+        val init = Tables.embeddings(s, d)
+          .filter(pqStanding)
+          .select(col("vec_id"), (col("label") % IvfCells).cast(IntegerType).as("cell"))
+        // q76's training discipline on the standing bucket: init
+        // means -> argmax reassign -> refined means. Scoring only
+        // standing vectors during training equals the oracle's
+        // score-everyone-then-join-standing (assignment is per-vector)
+        val trained = ivfTrain(sel, init).localCheckpoint(true)
+        val cent = pqTrain(sel)
+        Map(
+          "ivf_cent" -> Snapshots.commit(trained, dirOf("ivf_cent"), replace = true),
+          "ivf_cells" -> Snapshots.commit(
+            ivfAssignCells(sel, trained), dirOf("ivf_cells"), replace = true),
+          "codebook" -> Snapshots.commit(cent, dirOf("codebook"), replace = true),
+          "codes" -> Snapshots.commit(
+            pqAssign(sel, cent), dirOf("codes"), replace = true))
+    }
 
   /** q76's IVF training chain, callable on any element frame: init
     * means → argmax reassign → refined means.

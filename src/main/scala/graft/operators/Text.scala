@@ -89,29 +89,24 @@ object Text {
   private val stopList = StopWords.map(w => s"'$w'").mkString(", ")
 
   /** Standing language-mix index for q175: the 90% bucket's per-lang
-    * histogram committed ONCE per (JVM, dataset) as a pinned snapshot
-    * version — the baseCcIndex/clusterModel memoization discipline, so
-    * repeated executions (bench warmup + timed runs, Verify) genuinely
-    * reuse one committed snapshot instead of writing a fresh scratch
-    * dir and rescanning the standing bucket per run. Registered in
+    * histogram committed once per dataset, through [[graft.IndexStore]],
+    * as a pinned snapshot version, so repeated executions (bench warmup
+    * + timed runs, Verify) reuse one committed snapshot instead of
+    * rescanning the standing bucket per run. Registered in
     * [[graft.Prebuild]] so Bench builds it untimed at the target SF.
     */
-  private val mixIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
-
-  private[graft] def mixIndex(s: org.apache.spark.sql.SparkSession, d: String): (String, Int) =
-    mixIndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.IndexStore.resolve(s, "mix_index", 1, d, Seq("documents.parquet")) {
-        dirOf =>
-          val baseHist = Tables.documents(s, d)
-            .select(col("lang"),
-              (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"))
-            .filter(col("bucket") < 90)
-            .groupBy(col("lang")).agg(count(lit(1)).as("n_base"))
-          Map("hist" -> Snapshots.commit(baseHist, dirOf("hist"), replace = true))
-      }("hist")
-      (dir, Snapshots.versions(s, dir).last)
-    })
+  private[graft] def mixIndex(s: org.apache.spark.sql.SparkSession, d: String): (String, Int) = {
+    val dir = graft.IndexStore.resolve(s, "mix_index", 1, d, Seq("documents.parquet")) {
+      dirOf =>
+        val baseHist = Tables.documents(s, d)
+          .select(col("lang"),
+            (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"))
+          .filter(col("bucket") < 90)
+          .groupBy(col("lang")).agg(count(lit(1)).as("n_base"))
+        Map("hist" -> Snapshots.commit(baseHist, dirOf("hist"), replace = true))
+    }("hist")
+    (dir, Snapshots.versions(s, dir).last)
+  }
 
   /** (lang, marker-token lexicon) pairs for the n-gram/lexicon language
     * ID heuristic. Marker sets are disjoint; prediction is argmax hit
@@ -277,79 +272,73 @@ object Text {
     }.orderBy(col("merge_rank"))
 
   /** Standing shard index for q183: the 90% bucket's q182-style shard
-    * assignment committed once per (JVM, dataset), with the standing
-    * doc count as commit metadata — shipped shards are IMMUTABLE, so a
-    * delivery only needs the count scalar to know where its appended
-    * shards start (the pinned table exists so the append contract is
-    * auditable: GraphSpec-style disjointness pins read it back).
+    * assignment committed once per dataset, through
+    * [[graft.IndexStore]], with the standing doc count as commit
+    * metadata — shipped shards are IMMUTABLE, so a delivery only needs
+    * the count scalar to know where its appended shards start (the
+    * pinned table exists so the append contract is auditable:
+    * GraphSpec-style disjointness pins read it back).
     * Registered in [[graft.Prebuild]].
     */
-  private val shardIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int, Long)]()
-
   private[graft] def shardIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, Int, Long) =
-    shardIndexCache.computeIfAbsent(d, _ => {
-      val dir = graft.IndexStore.resolve(s, "shard_index", 1, d, Seq("documents.parquet")) {
-        dirOf =>
-          val ShardSize = 64
-          val nParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-          val keyed = Tables.documents(s, d)
-            .select(col("doc_id"),
-              TextFns.h60(concat(col("doc_id").cast("string"), lit("|sh"))).as("h"),
-              (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"),
-              lit(1L).as("one"))
-            .filter(col("bucket") < 90)
-            .select(col("doc_id"), col("h"), col("one"))
-          val assigned = Relational.globalCumsum(keyed, Seq("h", "doc_id"), "one", nParts)
-            .select(col("doc_id"),
-              (col("running_total").cast("long") - 1).as("rk"))
-            .select(col("doc_id"),
-              expr(s"rk div $ShardSize").cast("long").as("shard"),
-              (col("rk") % ShardSize).as("pos_in_shard"))
-            .localCheckpoint(true)
-          val n = assigned.count()
-          Map("shards" -> Snapshots.commit(assigned, dirOf("shards"), replace = true,
-            meta = Map("n_docs" -> n.toString)))
-      }("shards")
-      // the standing count rides the commit metadata, so a reusing JVM
-      // never rescans the corpus for it
-      val v = Snapshots.versions(s, dir).last
-      (dir, v, Snapshots.meta(s, dir, v)("n_docs").toLong)
-    })
+      s: org.apache.spark.sql.SparkSession, d: String): (String, Int, Long) = {
+    val dir = graft.IndexStore.resolve(s, "shard_index", 1, d, Seq("documents.parquet")) {
+      dirOf =>
+        val ShardSize = 64
+        val nParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+        val keyed = Tables.documents(s, d)
+          .select(col("doc_id"),
+            TextFns.h60(concat(col("doc_id").cast("string"), lit("|sh"))).as("h"),
+            (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"),
+            lit(1L).as("one"))
+          .filter(col("bucket") < 90)
+          .select(col("doc_id"), col("h"), col("one"))
+        val assigned = Relational.globalCumsum(keyed, Seq("h", "doc_id"), "one", nParts)
+          .select(col("doc_id"),
+            (col("running_total").cast("long") - 1).as("rk"))
+          .select(col("doc_id"),
+            expr(s"rk div $ShardSize").cast("long").as("shard"),
+            (col("rk") % ShardSize).as("pos_in_shard"))
+          .localCheckpoint(true)
+        val n = assigned.count()
+        Map("shards" -> Snapshots.commit(assigned, dirOf("shards"), replace = true,
+          meta = Map("n_docs" -> n.toString)))
+    }("shards")
+    // the standing count rides the commit metadata, so a reusing JVM
+    // never rescans the corpus for it
+    val v = Snapshots.versions(s, dir).last
+    (dir, v, Snapshots.meta(s, dir, v)("n_docs").toLong)
+  }
 
   /** Standing tokenizer index for q179: the [[BpeRounds]] merge rules
-    * TRAINED on the 90% standing bucket, committed once per
-    * (JVM, dataset) as a pinned snapshot — train once, apply to every
-    * delivery (the deployment contract of a real tokenizer; q170 is
-    * the training surface over the full corpus, this index freezes the
-    * production rules). Registered in [[graft.Prebuild]].
+    * TRAINED on the 90% standing bucket, committed once per dataset,
+    * through [[graft.IndexStore]], as a pinned snapshot — train once,
+    * apply to every delivery (the deployment contract of a real
+    * tokenizer; q170 is the training surface over the full corpus, this
+    * index freezes the production rules). Registered in
+    * [[graft.Prebuild]].
     */
-  private val bpeRulesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Int)]()
-
   private[graft] def bpeRulesIndex(
-      s: org.apache.spark.sql.SparkSession, d: String): (String, Int) =
-    bpeRulesCache.computeIfAbsent(d, _ => {
-      val dir = graft.IndexStore.resolve(s, "bpe_rules", 1, d, Seq("documents.parquet")) {
-        dirOf =>
-          val base = docs(s, d)
-            .select(col("doc_id"), col("tok"),
-              (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"))
-            .filter(col("bucket") < 90)
-            .select(col("doc_id"), col("tok"))
-          val rules = bpeTrainOf(base).select(col("merge_rank"), col("pair"))
-            .localCheckpoint(true)
-          // the frozen-apply contract (q179) replays ranks 1..BpeRounds in
-          // order; a gap would make bpeApplyRound's guard silently skip a
-          // round — fail LOUDLY at index-build time instead
-          val nRules = rules.count()
-          require(nRules == BpeRounds,
-            s"bpeRulesIndex: trained $nRules rules, expected $BpeRounds (degenerate corpus?)")
-          Map("rules" -> Snapshots.commit(rules, dirOf("rules"), replace = true))
-      }("rules")
-      (dir, Snapshots.versions(s, dir).last)
-    })
+      s: org.apache.spark.sql.SparkSession, d: String): (String, Int) = {
+    val dir = graft.IndexStore.resolve(s, "bpe_rules", 1, d, Seq("documents.parquet")) {
+      dirOf =>
+        val base = docs(s, d)
+          .select(col("doc_id"), col("tok"),
+            (TextFns.h60(col("doc_id").cast("string")) % 100).as("bucket"))
+          .filter(col("bucket") < 90)
+          .select(col("doc_id"), col("tok"))
+        val rules = bpeTrainOf(base).select(col("merge_rank"), col("pair"))
+          .localCheckpoint(true)
+        // the frozen-apply contract (q179) replays ranks 1..BpeRounds in
+        // order; a gap would make bpeApplyRound's guard silently skip a
+        // round — fail LOUDLY at index-build time instead
+        val nRules = rules.count()
+        require(nRules == BpeRounds,
+          s"bpeRulesIndex: trained $nRules rules, expected $BpeRounds (degenerate corpus?)")
+        Map("rules" -> Snapshots.commit(rules, dirOf("rules"), replace = true))
+    }("rules")
+    (dir, Snapshots.versions(s, dir).last)
+  }
 
   private[graft] val bpeTrainSql: String = {
     val rounds = (1 to BpeRounds).map { i =>

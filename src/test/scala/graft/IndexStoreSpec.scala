@@ -42,9 +42,8 @@ class IndexStoreSpec extends SparkSpec {
             dirOf("b"), replace = true))
       }
       val first = go()
-      // second resolve simulates a later JVM: the memoizer layer is
-      // above this call, so hitting resolve directly exercises exactly
-      // the sentinel-detection path a fresh process would take
+      // second resolve: IndexStore keeps no in-JVM memo, so this takes
+      // exactly the sentinel-detection path a fresh process would take
       val second = go()
       assert(builds == 1, "published index must be reused, not rebuilt")
       assert(first == second, "reuse must return the same part dirs")
@@ -57,6 +56,87 @@ class IndexStoreSpec extends SparkSpec {
       val meta = operators.Snapshots.meta(spark, sent, vs.last)
       assert(meta("parts") == "a,b")
       assert(meta.contains("fingerprint"))
+    }
+  }
+
+  test("a sentinel committed by an earlier JVM is reused with zero builds") {
+    withTempStore { root =>
+      val d = tempDataset()
+      val fp = IndexStore.fingerprint(d, Seq("src.txt"))
+      val base = s"$root/t_earlier-v1/$fp"
+      // an earlier JVM published part + sentinel; this JVM never built it
+      val v = operators.Snapshots.commit(Seq((3L, 3L)).toDF("x", "y"),
+        s"$base/a", replace = true)
+      operators.Snapshots.commit(Seq(1).toDF("published"), s"$base/_publish",
+        replace = true, meta = Map("parts" -> "a", "fingerprint" -> fp,
+          "part_a" -> v.toString))
+      var builds = 0
+      val parts = IndexStore.resolve(spark, "t_earlier", 1, d, Seq("src.txt")) { dirOf =>
+        builds += 1
+        Map("a" -> operators.Snapshots.commit(Seq((0L, 0L)).toDF("x", "y"),
+          dirOf("a"), replace = true))
+      }
+      assert(builds == 0, "a published sentinel must be reused, not rebuilt")
+      assert(parts == Map("a" -> s"$base/a"))
+      assert(operators.Snapshots.read(spark, parts("a")).collect()
+        .map(_.getLong(0)).toSeq == Seq(3L))
+    }
+  }
+
+  test("an index whose dir was removed since its publish is rebuilt, not served") {
+    withTempStore { root =>
+      val d = tempDataset()
+      var builds = 0
+      def go() = IndexStore.resolve(spark, "t_gone", 1, d, Seq("src.txt")) { dirOf =>
+        builds += 1
+        Map("a" -> operators.Snapshots.commit(Seq((1L, 0L)).toDF("x", "y"),
+          dirOf("a"), replace = true))
+      }
+      go()
+      // another JVM's prune (or an operator) removes the fp dir
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "t_gone-v1"))
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+      finally walk.close()
+      val parts = go()
+      assert(builds == 2, "a removed index dir must be rebuilt, not served")
+      assert(operators.Snapshots.read(spark, parts("a")).count() == 1)
+    }
+  }
+
+  /** A throwaway dataset dir with a writable copy of sf0.001 documents. */
+  private def documentsCopy(): String = {
+    val d = java.nio.file.Files.createTempDirectory("ixdocs_")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf("sf0.001"), "documents.parquet"),
+      d.resolve("documents.parquet"))
+    d.toString
+  }
+
+  test("a dataset regenerated inside one JVM is resolved again") {
+    withTempStore { _ =>
+      val d = documentsCopy()
+      val (first, _) = operators.Text.mixIndex(spark, d)
+      // regenerate: same rows, new mtime (what the fingerprint sees)
+      val f = java.nio.file.Paths.get(d, "documents.parquet")
+      val mtime = java.nio.file.Files.getLastModifiedTime(f).toMillis
+      java.nio.file.Files.write(f, java.nio.file.Files.readAllBytes(f))
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(mtime + 60000))
+      val (second, _) = operators.Text.mixIndex(spark, d)
+      assert(second != first, "a regenerated source must not be served the old index dir")
+    }
+  }
+
+  test("Prebuild.force labels what IndexStore did: reused after an accessor publish") {
+    withTempStore { _ =>
+      val builder = Prebuild.all.toMap.apply("mix_index")
+      val published = documentsCopy()
+      operators.Text.mixIndex(spark, published)
+      assert(Prebuild.force("mix_index", builder, spark, published) == "reused",
+        "an artifact its accessor already published must be labelled reused")
+      val fresh = documentsCopy()
+      assert(Prebuild.force("mix_index", builder, spark, fresh) == "built")
+      assert(Prebuild.force("mix_index", builder, spark, fresh) == "reused")
     }
   }
 

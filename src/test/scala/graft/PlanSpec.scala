@@ -829,10 +829,10 @@ class PlanSpec extends SparkSpec {
     // aggregates a query builder executes eagerly behind a
     // localCheckpoint/snapshot boundary surface here as opaque
     // LogicalRDD/relation leaves, so index-build internals (the
-    // Prebuild memoizers) are outside this sweep. Those paths are
-    // covered operationally instead: every index build runs in the
-    // bench prebuild phase and in Verify, where the 90 s pathology
-    // would DNF immediately rather than hide.
+    // IndexStore-published Prebuild artifacts) are outside this sweep.
+    // Those paths are covered operationally instead: every index build
+    // runs in the bench prebuild phase and in Verify, where the 90 s
+    // pathology would DNF immediately rather than hide.
     val d = sf("sf0.001")
     // detector self-check: the round-11 q71 shape (2 HLL + 2 exact
     // distincts in ONE agg) must be flagged, and its split-arm fix not

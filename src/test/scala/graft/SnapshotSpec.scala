@@ -631,9 +631,9 @@ class SnapshotSpec extends SparkSpec {
 
   test("q158: the headline filter-project reads a strict file subset of the shared snapshot") {
     val d = "/root/testdata/sf0.001"
-    // the SHARED clustered snapshot: built once per (JVM, dataset),
-    // hit by both q154 and q158 — clustering is a table property, not
-    // a per-query cost
+    // the SHARED clustered snapshot: built once per dataset (through
+    // IndexStore), hit by both q154 and q158 — clustering is a table
+    // property, not a per-query cost
     val dir = operators.Warehouse.shipDateClusteredFact(spark, d)
     assert(operators.Warehouse.shipDateClusteredFact(spark, d) == dir,
       "the clustered snapshot must be memoized per dataset")

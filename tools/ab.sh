@@ -29,6 +29,10 @@
 # then, per op label, each side's median ms over the complete pairs (on
 # batch the cycle's steps: etl, clustering, each query), which shows
 # which step moved when host drift moves the totals.
+# Before the metrics it prints, over the complete pairs, how many runs of
+# each side attempted each op count and the seeds whose two runs differ
+# in it: on batch a run holds one nightly cycle (4 ops) or two (8), and
+# the per-op metrics split on which.
 # A run that fails (non-zero exit, or failed ops) is reported and left
 # out of its pair. Needs SPARK_HOME; perfbench refuses to start beside
 # another JVM, so nothing else Spark may run meanwhile.
@@ -66,12 +70,14 @@ done
 touch "$WORK/results" "$WORK/ops"
 
 python3 - "$ROOT/BENCHMARK.json" "$WORK/results" "$WORK/ops" "$WORKLOAD" <<'EOF'
+import collections
 import json
 import statistics
 import sys
 
 bench, results, opsfile, workload = sys.argv[1:]
 runs = {"parent": {}, "change": {}}
+attempted = {"parent": {}, "change": {}}
 for line in open(results):
     side, seed, js = line.split(" ", 2)
     r = json.loads(js)
@@ -79,8 +85,14 @@ for line in open(results):
         print(f"{side} seed={seed}: {r['failed']} of {r['attempted']} ops failed; run left out")
     else:
         runs[side][seed] = {k: v["value"] for k, v in r["metrics"].items()}
+        attempted[side][seed] = r["attempted"]
 seeds = [s for s in runs["parent"] if s in runs["change"]]
 print(f"{workload}: {len(seeds)} complete pairs (seeds {' '.join(seeds)})")
+for side in ("parent", "change"):
+    counts = collections.Counter(attempted[side][s] for s in seeds)
+    print(f"  {side} runs by attempted ops: " + ", ".join(f"{n} ops: {counts[n]}" for n in sorted(counts)))
+split = [s for s in seeds if attempted["parent"][s] != attempted["change"][s]]
+print(f"  seeds whose two runs differ in attempted ops: {' '.join(split) or 'none'}")
 
 
 def quart(xs):
