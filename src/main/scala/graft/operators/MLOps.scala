@@ -204,26 +204,33 @@ object MLOps {
     f.crossJoin(broadcast(stats)).select(col("part_id") +: zcols: _*)
   }
 
-  private val zscoredSql: String = {
-    val statCols = MatrixFeatures.flatMap { c =>
+  /** DuckDB text of [[zStatAggs]] and [[zProject]], shared by
+    * [[zscoredSql]] (the frame's own moments) and [[ServeSql]] (the
+    * standing moments): the not-null filter, the 1-row stat columns,
+    * and the z-projection of `src` against the stats CTE `stats`.
+    */
+  private object ZSql {
+    val notNull: String = MatrixFeatures.map(c => s"$c IS NOT NULL").mkString(" AND ")
+    val statCols: String = MatrixFeatures.flatMap { c =>
       Seq(
         s"CAST(SUM(CAST(CAST($c AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) AS sum_$c",
         s"CAST(SUM(CAST(CAST($c AS DOUBLE) * CAST($c AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) AS sumsq_$c")
     }.mkString(",\n               ") + ",\n               CAST(COUNT(*) AS DOUBLE) AS n"
-    val zcols = MatrixFeatures.map { c =>
-      s"""ROUND((CAST($c AS DOUBLE) - sum_$c / n)
+    def project(src: String, stats: String): String = {
+      val zcols = MatrixFeatures.map { c =>
+        s"""ROUND((CAST($c AS DOUBLE) - sum_$c / n)
          / NULLIF(sqrt(greatest(sumsq_$c / n - (sum_$c / n) * (sum_$c / n),
              CAST(0 AS DOUBLE))), 0), 6) AS z_$c"""
-    }.mkString(",\n             ")
-    val notNull = MatrixFeatures.map(c => s"$c IS NOT NULL").mkString(" AND ")
-    s"""
-    clean AS (SELECT * FROM feat WHERE $notNull),
-    stats AS (SELECT $statCols FROM clean),
-    zs AS (
-      SELECT part_id,
-             $zcols
-      FROM clean CROSS JOIN stats)"""
+      }.mkString(",\n             ")
+      s"SELECT part_id,\n             $zcols\n      FROM $src CROSS JOIN $stats"
+    }
   }
+
+  private val zscoredSql: String = s"""
+    clean AS (SELECT * FROM feat WHERE ${ZSql.notNull}),
+    stats AS (SELECT ${ZSql.statCols} FROM clean),
+    zs AS (
+      ${ZSql.project("clean", "stats")})"""
 
   /** Fixed nearest-centroid cluster assignment over the z-scored
     * matrix — the model-APPLICATION half of the clustering pipeline
@@ -448,28 +455,6 @@ object MLOps {
     */
   private[graft] val LloydIters = 5
 
-  /** M2 as an ORACLE-GATED query: k=4 Lloyd k-means on the z-scored
-    * feature matrix with deterministic init (the fixed [[Centroids]])
-    * and a FIXED iteration count — the q140 recipe (replay
-    * deterministic training in SQL) applied to clustering, closing the
-    * "k-means labels are library-specific" oracle gap. Each round:
-    *  - assignment: argmin of squared z-distance to the 4 centroid
-    *    columns, ties to the lowest id (the [[centroidLabeled]] CASE) —
-    *    fixed-order IEEE double sums, identical in both engines;
-    *  - update: per-(cluster, feature) decimal(38,12)-exact sums of the
-    *    6-dp z values divided by the cluster count (one double op);
-    *    empty clusters keep their previous centroid.
-    * The MLlib KMeans surface (k-means|| init, convergence-driven) stays
-    * exercised by q57/[[kmeansCanonical]] and partition-pinned in
-    * KMeansSpec; KMeansSpec also pins that this Lloyd variant agrees
-    * with MLlib on a well-separated partition.
-    *
-    * Scale shape: [[LloydIters]]+1 passes over the (tiny, one row per
-    * part) z-matrix, each a map-side labeled aggregate against a
-    * broadcast 1-row centroid frame — exactly how distributed Lloyd
-    * scales to 100 TB (centroids are k·dim doubles however large the
-    * corpus; the per-pass shuffle carries k·(dim+1) partial sums).
-    */
   /** The generic fixed-iteration Lloyd loop behind [[lloydKMeans]]:
     * label every row of `zs` (all its columns are carried through, plus
     * `cluster`) after `iters` deterministic assignment/update rounds
@@ -486,22 +471,8 @@ object MLOps {
     val cent0 = s.range(1).select(
       inits.indices.flatMap(c =>
         feats.map(f => lit(inits(c).getOrElse(f, 0.0)).as(s"c${c}_$f"))): _*)
-    lloydAssignFrom(s, zs, feats, cent0, inits.length, iters)
+    nearestLabel(zs, feats, lloydTrain(s, zs, feats, cent0, inits.length, iters), inits.length)
   }
-
-  /** [[lloydAssign]] with a caller-supplied 1-row initial-centroid
-    * frame (columns `c<cluster>_<feat>`) — data-derived inits (q148
-    * seeds from the k lowest-id embeddings) replay in SQL exactly like
-    * literal ones.
-    */
-  private[graft] def lloydAssignFrom(
-      s: SparkSession,
-      zs: DataFrame,
-      feats: Seq[String],
-      cent0: DataFrame,
-      k: Int,
-      iters: Int): DataFrame =
-    nearestLabel(zs, feats, lloydTrain(s, zs, feats, cent0, k, iters), k)
 
   /** Label every `zs` row with its nearest centroid from the 1-row
     * `cent` frame (columns `c<cluster>_<feat>`) — the APPLICATION half
@@ -532,11 +503,11 @@ object MLOps {
       .select(zsCols :+ labExpr: _*)
   }
 
-  /** The TRAINING half of [[lloydAssignFrom]]: `iters` deterministic
-    * assignment/update rounds from `cent0`, returning the FINAL 1-row
-    * centroid frame (columns `c<cluster>_<feat>`) — exposed so the
-    * incremental serving path (q165) can persist the fitted model and
-    * score deliveries against it without retraining.
+  /** The TRAINING half of Lloyd: `iters` deterministic assignment/update
+    * rounds from `cent0`, returning the FINAL 1-row centroid frame
+    * (columns `c<cluster>_<feat>`) — exposed so the incremental serving
+    * path (q165) can persist the fitted model and score deliveries
+    * against it without retraining.
     */
   private[graft] def lloydTrain(
       s: SparkSession,
@@ -546,8 +517,7 @@ object MLOps {
       k: Int,
       iters: Int): DataFrame = {
     var cent: DataFrame = cent0.localCheckpoint(true)
-    for (it <- 1 to iters) {
-      s.sparkContext.setJobDescription(s"lloydTrain round $it")
+    for (_ <- 1 to iters) {
       val labeled = nearestLabel(zs, feats, cent, k)
       val aggs = (0 until k).flatMap { c =>
         val in = col("cluster") === c
@@ -561,28 +531,54 @@ object MLOps {
           when(col(s"n$c") > 0, col(s"s${c}_$f") / col(s"n$c").cast("double"))
             .otherwise(col(s"c${c}_$f")).as(s"c${c}_$f"))): _*)
         .localCheckpoint(true)
-      s.sparkContext.setJobDescription(null)
     }
     cent
   }
 
-  /** The q148 partition as a reusable unit: fixed-iteration Lloyd over
-    * an already-flattened embedding frame, seeded from the k
-    * lowest-part_id rows (the data-derived init both engines replay
-    * exactly). Shared by q148 (per-cluster stats) and q57 (the exact
-    * arm of the MLlib quality certificate) so both gates pin the SAME
-    * deterministic partition.
+  /** The data-derived Lloyd seed: a 1-row initial-centroid frame
+    * (columns `c<cluster>_<feat>`) holding the k lowest-part_id rows of
+    * `zs`, which both engines replay exactly ([[lowestIdSeedSql]]).
     */
-  private[graft] def embeddingLloydLabeled(
-      s: SparkSession, flat: DataFrame, xCols: Seq[String], kk: Int): DataFrame = {
-    val seeds = flat.orderBy(col("part_id")).limit(kk)
+  private def lowestIdSeed(zs: DataFrame, feats: Seq[String], k: Int): DataFrame = {
+    val seeds = zs.orderBy(col("part_id")).limit(k)
       .withColumn("rn", row_number().over(Window.orderBy(col("part_id"))))
-    val cent0Aggs = (0 until kk).flatMap(c => xCols.map(f =>
+    val aggs = (0 until k).flatMap(c => feats.map(f =>
       max(when(col("rn") === c + 1, col(f))).as(s"c${c}_$f")))
-    val cent0 = seeds.groupBy().agg(cent0Aggs.head, cent0Aggs.tail: _*)
-    lloydAssignFrom(s, flat, xCols, cent0, kk, LloydIters)
+    seeds.groupBy().agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Fixed-iteration Lloyd from [[lowestIdSeed]], every row of `zs`
+    * labeled — the one partition q57 (the exact arm of the MLlib
+    * quality certificate), q148 and the q163/q164/q166 selection sweep
+    * all pin.
+    */
+  private[graft] def seededLloydLabeled(zs: DataFrame, feats: Seq[String], k: Int): DataFrame = {
+    val cent0 = lowestIdSeed(zs, feats, k)
+    nearestLabel(zs, feats, lloydTrain(zs.sparkSession, zs, feats, cent0, k, LloydIters), k)
+  }
+
+  /** M2 as an ORACLE-GATED query: k=4 Lloyd k-means on the z-scored
+    * feature matrix with deterministic init (the fixed [[Centroids]])
+    * and a FIXED iteration count — the q140 recipe (replay
+    * deterministic training in SQL) applied to clustering, closing the
+    * "k-means labels are library-specific" oracle gap. Each round:
+    *  - assignment: argmin of squared z-distance to the 4 centroid
+    *    columns, ties to the lowest id (the [[centroidLabeled]] CASE) —
+    *    fixed-order IEEE double sums, identical in both engines;
+    *  - update: per-(cluster, feature) decimal(38,12)-exact sums of the
+    *    6-dp z values divided by the cluster count (one double op);
+    *    empty clusters keep their previous centroid.
+    * The MLlib KMeans surface (k-means|| init, convergence-driven) stays
+    * exercised by q57/[[kmeansCanonical]] and partition-pinned in
+    * KMeansSpec; KMeansSpec also pins that this Lloyd variant agrees
+    * with MLlib on a well-separated partition.
+    *
+    * Scale shape: [[LloydIters]]+1 passes over the (tiny, one row per
+    * part) z-matrix, each a map-side labeled aggregate against a
+    * broadcast 1-row centroid frame — exactly how distributed Lloyd
+    * scales to 100 TB (centroids are k·dim doubles however large the
+    * corpus; the per-pass shuffle carries k·(dim+1) partial sums).
+    */
   private[graft] def lloydKMeans(s: SparkSession, d: String): DataFrame = {
     val zs = zscored(s, d).localCheckpoint(true)
     val zInits = Centroids.map(_.map { case (f, v) => s"z_$f" -> v })
@@ -595,27 +591,46 @@ object MLOps {
       .orderBy(col("cluster"))
   }
 
-  /** Generic DuckDB CTE chain replaying [[lloydAssignFrom]]: `c0Cte`
-    * is the full initial-centroid CTE text (named `${pfx}c0`, columns
-    * `c<cluster>_<feat>`), `src` the CTE holding the feature rows. The
-    * final labeled rows (all `src` columns + `cluster`) land in
-    * `${pfx}labF`.
+  /** SQL twins of [[nearestLabel]]'s squared distance to centroid `c`
+    * (columns `c<c>_<feat>`) and its first-match argmin over `d0..d<k-1>`
+    * (ties to the lowest id).
+    */
+  private def distSql(feats: Seq[String], c: Int): String =
+    feats.map(f => s"($f - c${c}_$f) * ($f - c${c}_$f)").mkString(" + ")
+
+  private def argminSql(k: Int): String = {
+    def winsRest(c: Int): String =
+      (c + 1 until k).map(o => s"d$c <= d$o").mkString(" AND ")
+    val whens = (0 until k - 1).map(c => s"WHEN ${winsRest(c)} THEN $c").mkString(" ")
+    s"CAST(CASE $whens ELSE ${k - 1} END AS INT) AS cluster"
+  }
+
+  /** SQL twin of [[lowestIdSeed]]: the `${pfx}seed` / `${pfx}c0` CTE
+    * pair over the rows of CTE `src`, both materialized (every training
+    * chain references them more than once).
+    */
+  private def lowestIdSeedSql(pfx: String, src: String, feats: Seq[String], k: Int): String =
+    s"""${pfx}seed AS MATERIALIZED (
+           SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
+           FROM $src ORDER BY part_id LIMIT $k),
+    ${pfx}c0 AS MATERIALIZED (SELECT ${(0 until k).flatMap(c => feats.map(f =>
+        s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
+           FROM ${pfx}seed)"""
+
+  /** Generic DuckDB CTE chain replaying [[lloydTrain]] for
+    * [[LloydIters]] rounds, then [[nearestLabel]], over the feature
+    * rows of CTE `src`. The initial centroids (CTE `${pfx}c0`,
+    * columns `c<cluster>_<feat>`) are [[lowestIdSeedSql]] unless
+    * `c0Cte` supplies that CTE's full text. The final labeled rows (all
+    * `src` columns + `cluster`) land in `${pfx}labF`.
     */
   private def lloydSqlCtes(
       pfx: String,
       src: String,
       feats: Seq[String],
       k: Int,
-      iters: Int,
-      c0Cte: String): String = {
-    def distC(c: Int): String =
-      feats.map(f => s"($f - c${c}_$f) * ($f - c${c}_$f)").mkString(" + ")
-    val labCase = {
-      def winsRest(c: Int): String =
-        (c + 1 until k).map(o => s"d$c <= d$o").mkString(" AND ")
-      val whens = (0 until k - 1).map(c => s"WHEN ${winsRest(c)} THEN $c").mkString(" ")
-      s"CAST(CASE $whens ELSE ${k - 1} END AS INT) AS cluster"
-    }
+      c0Cte: Option[String] = None): String = {
+    val labCase = argminSql(k)
     // Every round CTE is AS MATERIALIZED: `${pfx}c$i` is referenced
     // TWICE (next round's distance cross join AND the next centroid's
     // fallback arm), so DuckDB 1.0's default inlining would duplicate
@@ -623,10 +638,11 @@ object MLOps {
     // blanked round 9's record (see graft-parity-recipes).
     def distsCte(name: String, centName: String): String =
       s"""$name AS MATERIALIZED (SELECT z.*,
-             ${(0 until k).map(c => s"${distC(c)} AS d$c").mkString(",\n             ")}
+             ${(0 until k).map(c => s"${distSql(feats, c)} AS d$c").mkString(",\n             ")}
            FROM $src z CROSS JOIN $centName)"""
-    val ctes = scala.collection.mutable.ArrayBuffer[String](c0Cte)
-    for (i <- 1 to iters) {
+    val ctes = scala.collection.mutable.ArrayBuffer[String](
+      c0Cte.getOrElse(lowestIdSeedSql(pfx, src, feats, k)))
+    for (i <- 1 to LloydIters) {
       ctes += distsCte(s"${pfx}ld$i", s"${pfx}c${i - 1}")
       ctes += s"""${pfx}lab$i AS MATERIALIZED (SELECT *, $labCase FROM ${pfx}ld$i)"""
       val statCols = (0 until k).flatMap { c =>
@@ -640,7 +656,7 @@ object MLOps {
         .mkString(",\n             ")
       ctes += s"${pfx}c$i AS MATERIALIZED (SELECT $newCent FROM ${pfx}st$i st CROSS JOIN ${pfx}c${i - 1} p)"
     }
-    ctes += distsCte(s"${pfx}ldF", s"${pfx}c$iters")
+    ctes += distsCte(s"${pfx}ldF", s"${pfx}c$LloydIters")
     ctes += s"""${pfx}labF AS (SELECT *, $labCase FROM ${pfx}ldF)"""
     ctes.mkString(",\n    ")
   }
@@ -653,7 +669,7 @@ object MLOps {
       s"CAST(${Centroids(c).getOrElse(f, 0.0)} AS DOUBLE) AS c${c}_z_$f"))
       .mkString("kc0 AS (SELECT ", ",\n             ", ")")
     s"""
-    ${lloydSqlCtes("k", "zs", zFeats, k, LloydIters, c0)}
+    ${lloydSqlCtes("k", "zs", zFeats, k, Some(c0))}
     SELECT cluster,
            CAST(COUNT(*) AS BIGINT) AS n_parts,
            CAST(SUM(CAST(z_profit AS DECIMAL(38,12))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_z_profit,
@@ -762,6 +778,30 @@ object MLOps {
         emb AS (SELECT part_id,
                $comps
         FROM pq GROUP BY part_id)"""
+  }
+
+  /** k of the embedding-clustering pair q57 (MLlib) / q148 (Lloyd). */
+  private val EmbedK = 10
+  private val embedXCols: Seq[String] = (1 to EmbedDim).map(j => s"x$j")
+
+  /** The q127 embeddings as the (part_id, x1..x<EmbedDim>) double frame
+    * q57 and q148 cluster.
+    */
+  private def embeddingFlat(s: SparkSession, d: String): DataFrame =
+    sequenceEmbedding(s, d)
+      .select(col("part_id") +:
+        (1 to EmbedDim).map(j => col(s"e$j").cast("double").as(s"x$j")): _*)
+      .localCheckpoint(true)
+
+  /** The q57/q148 oracle prefix: the embeddings as `ezs` and their
+    * seeded Lloyd chain, final labels in `elabF`.
+    */
+  private val embeddingLloydSql: String = {
+    val xSel = (1 to EmbedDim).map(j => s"CAST(e$j AS DOUBLE) AS x$j").mkString(", ")
+    s"""
+        WITH $sequenceEmbeddingSql,
+        ezs AS (SELECT part_id, $xSel FROM emb),
+        ${lloydSqlCtes("e", "ezs", embedXCols, EmbedK)}"""
   }
 
   /** Components / training rounds of [[learnedEmbedding]]. */
@@ -1342,7 +1382,7 @@ object MLOps {
   // performs by eye (k=4 is asserted, never derived;
   // data_clustering.ipynb cell 21 / LSTM_features_learning.ipynb
   // cell 22). For k = 2..6 run the replayable fixed-iteration Lloyd
-  // (the q56/q148 recipe) from the k lowest-part_id z-rows (q148's
+  // from the k lowest-part_id z-rows ([[seededLloydLabeled]], q148's
   // data-derived seed policy — generalizes to any k, unlike q56's
   // fixed k=4 literals) and report each cluster's EXACT within-
   // cluster sum of squares: z values in integer micro-units, WSS via
@@ -1365,18 +1405,20 @@ object MLOps {
     * exposed so KMeansSpec can recompute the WSS stats independently
     * from the SAME assignment.
     */
-  private[graft] def elbowLabeledForTest(s: SparkSession, d: String, k: Int): DataFrame = {
-    val zFeats = MatrixFeatures.map(f => s"z_$f")
-    elbowLabeled(zscored(s, d).localCheckpoint(true), zFeats, k)
-  }
+  private[graft] def elbowLabeledForTest(s: SparkSession, d: String, k: Int): DataFrame =
+    seededLloydLabeled(zscored(s, d).localCheckpoint(true), MatrixFeatures.map(f => s"z_$f"), k)
 
-  private def elbowLabeled(zs: DataFrame, zFeats: Seq[String], k: Int): DataFrame = {
-    val seeds = zs.orderBy(col("part_id")).limit(k)
-      .withColumn("rn", row_number().over(Window.orderBy(col("part_id"))))
-    val cent0Aggs = (0 until k).flatMap(c => zFeats.map(f =>
-      max(when(col("rn") === c + 1, col(f))).as(s"c${c}_$f")))
-    val cent0 = seeds.groupBy().agg(cent0Aggs.head, cent0Aggs.tail: _*)
-    lloydAssignFrom(zs.sparkSession, zs, zFeats, cent0, k, LloydIters)
+  /** The q163/q164/q166 oracle prefix: features, z-matrix (`zsm`,
+    * materialized — every chain references it multiply per round) and
+    * one seeded training chain per k, CTE prefix `$pfx$k`.
+    */
+  private def selectionChainsSql(pfx: String, ks: Seq[Int]): String = {
+    val zFeats = MatrixFeatures.map(f => s"z_$f")
+    s"""
+    WITH $featuresSql,
+    $zscoredSql,
+    zsm AS MATERIALIZED (SELECT * FROM zs),
+    ${ks.map(k => lloydSqlCtes(s"$pfx$k", "zsm", zFeats, k)).mkString(",\n    ")}"""
   }
 
   /** Model-selection assignments for every candidate k, trained once
@@ -1400,7 +1442,7 @@ object MLOps {
       graft.IndexStore.publishPlainDir(dirOf("labels")) { tmp =>
         val zFeats = MatrixFeatures.map(f => s"z_$f")
         val zs = zscored(s, d).localCheckpoint(true)
-        ElbowKs.map(k => elbowLabeled(zs, zFeats, k)
+        ElbowKs.map(k => seededLloydLabeled(zs, zFeats, k)
             .withColumn("k", lit(k).cast(IntegerType)))
           .reduce(_.unionByName(_))
           .write.partitionBy("k").parquet(tmp)
@@ -1437,22 +1479,13 @@ object MLOps {
   }
 
   /** Oracle: replays every k's seed + training chain CTE-for-CTE
-    * ([[lloydSqlCtes]], the q56/q148 machinery). The z-matrix and the
-    * per-k seeds are `AS MATERIALIZED` — five chains each reference
-    * the source multiply per round, the inlining hazard class the
-    * k-core oracle documented.
+    * ([[selectionChainsSql]]). The z-matrix and the per-k seeds are
+    * `AS MATERIALIZED` — five chains each reference the source
+    * multiply per round, the inlining hazard class the k-core oracle
+    * documented.
     */
   private lazy val elbowSweepSql: String = {
     val zFeats = MatrixFeatures.map(f => s"z_$f")
-    val chains = ElbowKs.map { k =>
-      val c0 = s"""w${k}seed AS MATERIALIZED (
-           SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-           FROM zsm ORDER BY part_id LIMIT $k),
-    w${k}c0 AS MATERIALIZED (SELECT ${(0 until k).flatMap(c => zFeats.map(f =>
-        s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-           FROM w${k}seed)"""
-      lloydSqlCtes(s"w$k", "zsm", zFeats, k, LloydIters, c0)
-    }
     def zi(f: String) = s"CAST(ROUND($f * 1000000) AS BIGINT)"
     val num = zFeats.map(f =>
       s"(CAST(COUNT(*) AS HUGEINT) * SUM(${zi(f)} * ${zi(f)}) - SUM(${zi(f)}) * SUM(${zi(f)}))")
@@ -1464,11 +1497,7 @@ object MLOps {
                     // (CAST(COUNT(*) AS HUGEINT) * 1000000) AS BIGINT) AS wss_micro
         FROM w${k}labF GROUP BY cluster"""
     }
-    s"""
-    WITH $featuresSql,
-    $zscoredSql,
-    zsm AS MATERIALIZED (SELECT * FROM zs),
-    ${chains.mkString(",\n    ")}
+    s"""${selectionChainsSql("w", ElbowKs)}
     SELECT * FROM (
       ${sels.mkString("\n      UNION ALL\n      ")}
     ) ORDER BY k, cluster"""
@@ -1534,15 +1563,6 @@ object MLOps {
     */
   private lazy val chIndexSql: String = {
     val zFeats = MatrixFeatures.map(f => s"z_$f")
-    val chains = ElbowKs.map { k =>
-      val c0 = s"""x${k}seed AS MATERIALIZED (
-           SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-           FROM zsm ORDER BY part_id LIMIT $k),
-    x${k}c0 AS MATERIALIZED (SELECT ${(0 until k).flatMap(c => zFeats.map(f =>
-        s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-           FROM x${k}seed)"""
-      lloydSqlCtes(s"x$k", "zsm", zFeats, k, LloydIters, c0)
-    }
     def zi(f: String) = s"CAST(ROUND($f * 1000000) AS BIGINT)"
     val clusterStats = zFeats.flatMap(f => Seq(
       s"SUM(${zi(f)}) AS s1_$f",
@@ -1580,11 +1600,7 @@ object MLOps {
                     // (CAST(w_micro AS HUGEINT) * ${k - 1}) AS BIGINT) AS ch_micro
         FROM x${k}fin"""
     }
-    s"""
-    WITH $featuresSql,
-    $zscoredSql,
-    zsm AS MATERIALIZED (SELECT * FROM zs),
-    ${chains.mkString(",\n    ")},
+    s"""${selectionChainsSql("x", ElbowKs)},
     ${statCtes.mkString(",\n    ")}
     SELECT * FROM (
       ${finSels.mkString("\n      UNION ALL\n      ")}
@@ -1665,17 +1681,7 @@ object MLOps {
     * (three consumers each).
     */
   private lazy val ariSweepSql: String = {
-    val zFeats = MatrixFeatures.map(f => s"z_$f")
     val ks = AriPairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val chains = ks.map { k =>
-      val c0 = s"""r${k}seed AS MATERIALIZED (
-           SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-           FROM zsm ORDER BY part_id LIMIT $k),
-    r${k}c0 AS MATERIALIZED (SELECT ${(0 until k).flatMap(c => zFeats.map(f =>
-        s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-           FROM r${k}seed)"""
-      lloydSqlCtes(s"r$k", "zsm", zFeats, k, LloydIters, c0)
-    }
     val labs = ks.map(k =>
       s"rl$k AS MATERIALIZED (SELECT part_id, cluster FROM r${k}labF)")
     val pairCtes = AriPairs.map { case (ka, kb) =>
@@ -1704,11 +1710,7 @@ object MLOps {
             FROM ${p}sn CROSS JOIN ${p}a CROSS JOIN ${p}b)))"""
     }
     val sels = AriPairs.map { case (ka, kb) => s"SELECT * FROM p$ka${kb}f" }
-    s"""
-    WITH $featuresSql,
-    $zscoredSql,
-    zsm AS MATERIALIZED (SELECT * FROM zs),
-    ${chains.mkString(",\n    ")},
+    s"""${selectionChainsSql("r", ks)},
     ${labs.mkString(",\n    ")},
     ${pairCtes.mkString(",\n    ")}
     SELECT * FROM (
@@ -1758,12 +1760,7 @@ object MLOps {
       val f90 = featuresWhere(s, d, liPartBucket < 90).na.drop().cache()
       val stats = f90.agg(zStatAggs.head, zStatAggs.tail: _*).localCheckpoint(true)
       val z90 = zProject(f90, stats).localCheckpoint(true)
-      val seeds = z90.orderBy(col("part_id")).limit(ServeK)
-        .withColumn("rn", row_number().over(Window.orderBy(col("part_id"))))
-      val cent0Aggs = (0 until ServeK).flatMap(c => zFeats.map(f =>
-        max(when(col("rn") === c + 1, col(f))).as(s"c${c}_$f")))
-      val cent0 = seeds.groupBy().agg(cent0Aggs.head, cent0Aggs.tail: _*)
-      val centF = lloydTrain(s, z90, zFeats, cent0, ServeK, LloydIters)
+      val centF = lloydTrain(s, z90, zFeats, lowestIdSeed(z90, zFeats, ServeK), ServeK, LloydIters)
       val baseHist = nearestLabel(z90, zFeats, centF, ServeK)
         .groupBy(col("cluster")).agg(count(lit(1)).as("n_base"))
       val vs = Map(
@@ -1801,13 +1798,6 @@ object MLOps {
       .orderBy(col("part_id"))
   }
 
-  /** Oracle: the standing split, stats, z-projection, seed policy and
-    * all [[LloydIters]] training rounds replayed CTE-for-CTE
-    * ([[lloydSqlCtes]]), then the delivery z-projected with the
-    * STANDING stats and labeled against the final centroids. The split
-    * and every iterated CTE are `AS MATERIALIZED` (the k-core
-    * inlining hazard class).
-    */
   /** The oracle's serving-chain WITH prefix — standing split, stats,
     * z-projection, seed policy, all [[LloydIters]] training rounds
     * ([[lloydSqlCtes]]), and the delivery labeled against the final
@@ -1819,34 +1809,14 @@ object MLOps {
   private object ServeSql {
     val zFeats: Seq[String] = MatrixFeatures.map(f => s"z_$f")
     private val h = graft.functions.TextFns.Sql.h60("CAST(part_id AS VARCHAR)")
-    private val notNull = MatrixFeatures.map(c => s"$c IS NOT NULL").mkString(" AND ")
-    private val statCols = MatrixFeatures.flatMap { c =>
-      Seq(
-        s"CAST(SUM(CAST(CAST($c AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) AS sum_$c",
-        s"CAST(SUM(CAST(CAST($c AS DOUBLE) * CAST($c AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) AS sumsq_$c")
-    }.mkString(",\n               ") + ",\n               CAST(COUNT(*) AS DOUBLE) AS n"
-    private def zsel(src: String): String = {
-      val zcols = MatrixFeatures.map { c =>
-        s"""ROUND((CAST($c AS DOUBLE) - sum_$c / n)
-           / NULLIF(sqrt(greatest(sumsq_$c / n - (sum_$c / n) * (sum_$c / n),
-               CAST(0 AS DOUBLE))), 0), 6) AS z_$c"""
-      }.mkString(",\n             ")
-      s"SELECT part_id,\n             $zcols\n      FROM $src CROSS JOIN mst"
-    }
-    private val c0 = s"""mseed AS MATERIALIZED (
-         SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-         FROM z90 ORDER BY part_id LIMIT $ServeK),
-    mc0 AS MATERIALIZED (SELECT ${(0 until ServeK).flatMap(c => zFeats.map(f =>
-      s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-         FROM mseed)"""
-    def distC(c: Int): String =
-      zFeats.map(f => s"($f - c${c}_$f) * ($f - c${c}_$f)").mkString(" + ")
-    val labCase: String = {
-      def winsRest(c: Int): String =
-        (c + 1 until ServeK).map(o => s"d$c <= d$o").mkString(" AND ")
-      val whens = (0 until ServeK - 1).map(c => s"WHEN ${winsRest(c)} THEN $c").mkString(" ")
-      s"CAST(CASE $whens ELSE ${ServeK - 1} END AS INT) AS cluster"
-    }
+    /** `${pfx}lab` (materialized): the rows of CTE `src` with the final
+      * centroid columns and their argmin cluster.
+      */
+    def labeled(pfx: String, src: String): String =
+      s"""${pfx}ld AS (SELECT z.*, c.*,
+           ${(0 until ServeK).map(c => s"${distSql(zFeats, c)} AS d$c").mkString(",\n           ")}
+         FROM $src z CROSS JOIN mc$LloydIters c),
+    ${pfx}lab AS MATERIALIZED (SELECT *, ${argminSql(ServeK)} FROM ${pfx}ld)"""
     def idist(c: Int): String =
       zFeats.map(f =>
         s"""(CAST(ROUND($f * 1000000) AS HUGEINT) - CAST(ROUND(c${c}_$f * 1000000) AS HUGEINT))
@@ -1854,19 +1824,23 @@ object MLOps {
         .mkString("\n           + ")
     val chain: String = s"""
     WITH $featuresSql,
-    clean AS (SELECT * FROM feat WHERE $notNull),
+    clean AS (SELECT * FROM feat WHERE ${ZSql.notNull}),
     f90 AS MATERIALIZED (SELECT * FROM clean WHERE ($h % 100) < 90),
     fdel AS MATERIALIZED (SELECT * FROM clean WHERE ($h % 100) >= 90),
-    mst AS MATERIALIZED (SELECT $statCols FROM f90),
-    z90 AS MATERIALIZED (${zsel("f90")}),
-    ${lloydSqlCtes("m", "z90", zFeats, ServeK, LloydIters, c0)},
-    zd AS (${zsel("fdel")}),
-    sld AS (SELECT z.*, c.*,
-           ${(0 until ServeK).map(c => s"${distC(c)} AS d$c").mkString(",\n           ")}
-         FROM zd z CROSS JOIN mc$LloydIters c),
-    slab AS MATERIALIZED (SELECT *, $labCase FROM sld)"""
+    mst AS MATERIALIZED (SELECT ${ZSql.statCols} FROM f90),
+    z90 AS MATERIALIZED (${ZSql.project("f90", "mst")}),
+    ${lloydSqlCtes("m", "z90", zFeats, ServeK)},
+    zd AS (${ZSql.project("fdel", "mst")}),
+    ${labeled("s", "zd")}"""
   }
 
+  /** Oracle: the standing split, stats, z-projection, seed policy and
+    * all [[LloydIters]] training rounds replayed CTE-for-CTE
+    * ([[lloydSqlCtes]]), then the delivery z-projected with the
+    * STANDING stats and labeled against the final centroids. The split
+    * and every iterated CTE are `AS MATERIALIZED` (the k-core
+    * inlining hazard class).
+    */
   private lazy val incrementalAssignSql: String =
     s"""${ServeSql.chain}
     SELECT part_id, cluster,
@@ -1925,14 +1899,9 @@ object MLOps {
     * the same final centroids; histograms joined and the drift
     * arithmetic replayed in HUGEINT.
     */
-  private lazy val clusterMixDriftSql: String = {
-    val bld = (0 until ServeK).map(c => s"${ServeSql.distC(c)} AS d$c")
-      .mkString(",\n           ")
+  private lazy val clusterMixDriftSql: String =
     s"""${ServeSql.chain},
-    bld AS (SELECT z.*, c.*,
-           $bld
-         FROM z90 z CROSS JOIN mc$LloydIters c),
-    blab AS MATERIALIZED (SELECT *, ${ServeSql.labCase} FROM bld),
+    ${ServeSql.labeled("b", "z90")},
     bh AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_base FROM blab GROUP BY 1),
     dh AS (SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_delta FROM slab GROUP BY 1),
     j AS MATERIALIZED (
@@ -1949,7 +1918,6 @@ object MLOps {
                      - CAST(j.n_delta AS HUGEINT) * t.nb) * 1000000)
                 // (CAST(t.nb AS HUGEINT) * t.nd) AS BIGINT) AS drift_micro
     FROM j, t ORDER BY j.cluster"""
-  }
 
   // ---------------------------------------------------------------
   // q181: delivery-time centroid drift — the GEOMETRY surface of the
@@ -2143,16 +2111,11 @@ object MLOps {
     Q(
       "q57_kmeans_embeddings",
       (s, d) => {
-        val kk = 10
-        val xCols = (1 to EmbedDim).map(j => s"x$j")
-        val flat = sequenceEmbedding(s, d)
-          .select(col("part_id") +:
-            (1 to EmbedDim).map(j => col(s"e$j").cast("double").as(s"x$j")): _*)
-          .localCheckpoint(true)
-        val ml = kmeansCanonical(flat, xCols, "part_id", kk)
+        val flat = embeddingFlat(s, d)
+        val ml = kmeansCanonical(flat, embedXCols, "part_id", EmbedK)
           .select(col("part_id"), col("cluster"))
           .cache() // consumed by ARI + the fused WSS pass
-        val lloyd = embeddingLloydLabeled(s, flat, xCols, kk)
+        val lloyd = seededLloydLabeled(flat, embedXCols, EmbedK)
           .select(col("part_id"), col("cluster"))
           .cache() // consumed by ARI + the fused WSS pass
         // BOTH labelings' WSS in ONE join+aggregate over the flat frame
@@ -2165,13 +2128,13 @@ object MLOps {
           .unionByName(lloyd.withColumn("arm", lit("lloyd")))
         val joined = labeled.join(flat, "part_id")
           .cache() // consumed by the means agg AND the d² join-back
-        val mAggs = xCols.map(f => (dsum12(col(f)) / count(lit(1)).cast("double")).as(s"m_$f"))
+        val mAggs = embedXCols.map(f => (dsum12(col(f)) / count(lit(1)).cast("double")).as(s"m_$f"))
         val means = joined.groupBy(col("arm"), col("cluster"))
           .agg(mAggs.head, mAggs.tail: _*)
           .cache() // ≤ 2k rows; consumed by the d² join-back AND n_clusters
         val wss = joined.join(broadcast(means), Seq("arm", "cluster"))
           .select(col("arm"),
-            xCols.map(f => (col(f) - col(s"m_$f")) * (col(f) - col(s"m_$f")))
+            embedXCols.map(f => (col(f) - col(s"m_$f")) * (col(f) - col(s"m_$f")))
               .reduceLeft(_ + _).as("d2"))
           .groupBy(col("arm"))
           .agg(sum(col("d2").cast(org.apache.spark.sql.types.DecimalType(38, 6))).as("wss"))
@@ -2184,7 +2147,7 @@ object MLOps {
         // pass over the labeled data
         val nClusters = means
           .agg(countDistinct(when(col("arm") === "ml", col("cluster"))).as("n_clusters"))
-        val stats = ariRow(ml, lloyd, kk, kk) // exact ints; b_pairs = Lloyd marginal
+        val stats = ariRow(ml, lloyd, EmbedK, EmbedK) // exact ints; b_pairs = Lloyd marginal
         stats
           .crossJoin(wss)
           .crossJoin(nClusters)
@@ -2195,27 +2158,14 @@ object MLOps {
             (col("wss_ml") * 100 <= col("wss_lloyd") * 105).as("wss_ok"),
             (col("ari_micro") >= 100000L).as("ari_floor_ok"))
       },
-      Some {
-        val kk = 10
-        val xCols = (1 to EmbedDim).map(j => s"x$j")
-        val xSel = (1 to EmbedDim).map(j => s"CAST(e$j AS DOUBLE) AS x$j").mkString(", ")
-        val c0 = s"""eseed AS MATERIALIZED (SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-             FROM ezs ORDER BY part_id LIMIT $kk),
-    ec0 AS MATERIALIZED (SELECT ${(0 until kk).flatMap(c => xCols.map(f =>
-          s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-           FROM eseed)"""
-        s"""
-        WITH $sequenceEmbeddingSql,
-        ezs AS (SELECT part_id, $xSel FROM emb),
-        ${lloydSqlCtes("e", "ezs", xCols, kk, LloydIters, c0)},
+      Some(s"""$embeddingLloydSql,
         sz AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM elabF GROUP BY cluster)
         SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM ezs) AS n_parts,
-               CAST($kk AS BIGINT) AS n_clusters,
+               CAST($EmbedK AS BIGINT) AS n_clusters,
                (SELECT CAST(SUM((CAST(c AS HUGEINT) * (c - 1)) // 2) AS BIGINT) FROM sz)
                  AS lloyd_pairs,
                TRUE AS wss_ok,
-               TRUE AS ari_floor_ok"""
-      },
+               TRUE AS ari_floor_ok"""),
       bench = true
     ),
 
@@ -2228,36 +2178,16 @@ object MLOps {
     // KMeansSpec partition gates.
     Q(
       "q148_lloyd_embeddings",
-      (s, d) => {
-        val kk = 10
-        val xCols = (1 to EmbedDim).map(j => s"x$j")
-        val zs = sequenceEmbedding(s, d)
-          .select(col("part_id") +:
-            (1 to EmbedDim).map(j => col(s"e$j").cast("double").as(s"x$j")): _*)
-          .localCheckpoint(true)
-        embeddingLloydLabeled(s, zs, xCols, kk)
+      (s, d) =>
+        seededLloydLabeled(embeddingFlat(s, d), embedXCols, EmbedK)
           .groupBy(col("cluster"))
           .agg(count(lit(1)).as("n_parts"), min(col("part_id")).as("min_part_id"))
-          .orderBy(col("cluster"))
-      },
-      Some {
-        val kk = 10
-        val xCols = (1 to EmbedDim).map(j => s"x$j")
-        val xSel = (1 to EmbedDim).map(j => s"CAST(e$j AS DOUBLE) AS x$j").mkString(", ")
-        val c0 = s"""eseed AS MATERIALIZED (SELECT *, CAST(row_number() OVER (ORDER BY part_id) AS INT) AS rn
-             FROM ezs ORDER BY part_id LIMIT $kk),
-    ec0 AS MATERIALIZED (SELECT ${(0 until kk).flatMap(c => xCols.map(f =>
-          s"MAX(CASE WHEN rn = ${c + 1} THEN $f END) AS c${c}_$f")).mkString(",\n             ")}
-           FROM eseed)"""
-        s"""
-        WITH $sequenceEmbeddingSql,
-        ezs AS (SELECT part_id, $xSel FROM emb),
-        ${lloydSqlCtes("e", "ezs", xCols, kk, LloydIters, c0)}
+          .orderBy(col("cluster")),
+      Some(s"""$embeddingLloydSql
         SELECT cluster,
                CAST(COUNT(*) AS BIGINT) AS n_parts,
                MIN(part_id) AS min_part_id
-        FROM elabF GROUP BY cluster ORDER BY cluster"""
-      }
+        FROM elabF GROUP BY cluster ORDER BY cluster""")
     ),
 
     // PCA(4) on the z-scored matrix: explained-variance summary (M3),

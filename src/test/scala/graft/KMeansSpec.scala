@@ -130,6 +130,28 @@ class KMeansSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("the selection sweep seeds Lloyd from the k lowest-part_id z-rows") {
+    // pins the seed policy in tier-1 (DuckDB parity pins it too): the
+    // sweep's k=4 labels equal lloydAssign from the literal z-rows of
+    // the 4 smallest part_ids, on a differently partitioned z-matrix
+    val d = sf("sf0.001")
+    val zFeats = MLOps.MatrixFeatures.map(f => s"z_$f")
+    val zs = MLOps.zscored(spark, d).repartition(7)
+    val inits = zs.orderBy(col("part_id")).limit(4).collect().toSeq
+      .map(r => zFeats.map(f => f -> r.getAs[Double](f)).toMap)
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+      df.select(col("part_id"), col("cluster")).collect()
+        .map(r => r.getAs[Long]("part_id") -> r.getAs[Int]("cluster")).toMap
+    val sweep = labels(MLOps.elbowLabeledForTest(spark, d, 4))
+    val literal = labels(MLOps.lloydAssign(spark, zs, zFeats, inits, MLOps.LloydIters))
+    assert(sweep.nonEmpty)
+    assert(sweep == literal, {
+      val diff = (sweep.keySet ++ literal.keySet).filter(p => sweep.get(p) != literal.get(p))
+      s"${diff.size} parts differ, e.g. ${diff.take(5).map(p => (p, sweep.get(p), literal.get(p)))}"
+    })
+    spark.catalog.clearCache()
+  }
+
   test("q164 CH index: TSS invariant, exact W/B decomposition, ties to q163's floors") {
     val d = sf("sf0.001")
     val ch = SparkEntry.queries("q164_ch_index")(spark, d).collect()

@@ -1,11 +1,13 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
+
+import scala.jdk.CollectionConverters._
 
 /** The shared capped run: timeouts cancel the query's Spark jobs, errors
   * stay errors, and the cache-clear guard covers every timed-out runner
@@ -82,6 +84,40 @@ class RunnerSpec extends SparkSpec {
     }
     assert(r.isInstanceOf[Runner.Err], s"expected Err, got $r")
     assert(Runner.safeToClearCache())
+  }
+
+  test("an iterative operator inside a run keeps the run's job label on every job") {
+    // RunnerSpec and JobCount find a run's jobs by spark.job.description;
+    // lloydTrain's driver-sequenced rounds must not overwrite or clear it
+    val seen = new ConcurrentLinkedQueue[(Int, String)]()
+    val marker = java.util.UUID.randomUUID.toString
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (Option(p.getProperty("spark.jobGroup.id")).exists(_.startsWith("lloyd_label#")))
+            seen.add(e.jobId -> p.getProperty("spark.job.description"))
+          if (p.getProperty("graft.spec.flush") == marker) seen.add(e.jobId -> marker)
+        }
+    }
+    val pts = spark.range(0, 12, 1, 3).select(col("id"), (col("id") % 3 * 10.0).as("f0"))
+    val inits = Seq(Map("f0" -> 0.0), Map("f0" -> 20.0))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = Runner.run(spark, "lloyd_label", 120) {
+        operators.MLOps.lloydAssign(spark, pts, Seq("f0"), inits, operators.MLOps.LloydIters).count()
+        spark.range(1).count()
+      }
+      assert(r.isInstanceOf[Runner.Ok], s"expected Ok, got $r")
+      // the listener bus is ordered: once the marker job is seen, every
+      // job of the run has been
+      spark.sparkContext.setLocalProperty("graft.spec.flush", marker)
+      try spark.range(1).count() finally spark.sparkContext.setLocalProperty("graft.spec.flush", null)
+      eventually(timeout(30.seconds)) { assert(seen.asScala.exists(_._2 == marker)) }
+      val run = seen.asScala.filter(_._2 != marker).toSeq.sortBy(_._1)
+      assert(run.size > operators.MLOps.LloydIters, s"the run's jobs: $run")
+      assert(run.last._2 == "lloyd_label", s"the run's last job lost its label: $run")
+      assert(run.forall(_._2 == "lloyd_label"), s"a job of the run lost its label: $run")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("safeToClearCache stays false while any timed-out runner is alive, even after a later run") {
