@@ -13,13 +13,25 @@ import org.apache.spark.sql.functions._
   *
   * `fact`, `clusters`, `products` and the `catalog` join are cached
   * when first used: the service's in-memory snapshot of the warehouse,
-  * so a search page is one job over in-memory rows. When [[EtlJob]] or
-  * [[ClusteringJob]] overwrite those tables through the same session,
-  * Spark drops the cached rows and refills them from the new files on
-  * the next call (an uncached frame would still list the deleted
-  * files). `lastUpdate` reads the ledger on every call. Schemas resolve
-  * through [[graft.Tables.read]], once per file fingerprint; that memo
-  * holds metadata only, the rows come from the cache or the files.
+  * so a search page is one job over in-memory rows. The four pages
+  * that take no parameters (`clusterSummary`, `clusterStats`,
+  * `brandRollup`, `clusterPivot`) are cached frames too, filled by
+  * their first call, so a repeat load is one scan of a few thousand
+  * in-memory rows — the reference's `@st.cache_data` page memos
+  * (`Clustering_Analysis.py:24,76`; lines 13, 39 and 61 of the
+  * `pages/` scripts).
+  * When [[EtlJob]] or [[ClusteringJob]] overwrite those tables through
+  * the same session, Spark re-caches every cached plan that reads the
+  * path, and each frame refills from the new files on the next call
+  * (an uncached frame would still list the deleted files) — the port
+  * of the reference's `st.cache_data.clear()` after a pipeline rerun
+  * (`Clustering_Analysis.py:67`).
+  * `spark.catalog.clearCache()` drops all of them alike. `lastUpdate`
+  * reads the ledger on every call (the reference caches it for 60 s
+  * only), and `productSearch` plans its page over `catalog` per call.
+  * Schemas resolve through [[graft.Tables.read]], once per file
+  * fingerprint; that memo holds metadata only, the rows come from the
+  * cache or the files.
   */
 final class AnalyticsService(spark: SparkSession, warehouseDir: String) {
 
@@ -45,41 +57,60 @@ final class AnalyticsService(spark: SparkSession, warehouseDir: String) {
       .groupBy(col("pipeline_name"))
       .agg(max(col("last_update")).as("last_update"))
 
+  /** A new frame over a memoized page: each call plans afresh, so
+    * Spark's cache lookup serves the page's current rows. The memo
+    * frame itself keeps the physical plan of its first action, and with
+    * it the rows cached before a rewrite of the warehouse.
+    */
+  private def served(page: DataFrame): DataFrame = page.select("*")
+
   /** J7+A7: the main-page cluster summary (left join keeps products
     * with zero recent sales; COALESCE matches the reference's SQL).
     */
-  def clusterSummary(): DataFrame =
+  def clusterSummary(): DataFrame = served(summaryPage)
+
+  private lazy val summaryPage: DataFrame =
     clusters
       .join(fact, clusters("part_id") === fact("product_id"), "left")
       .groupBy(col("part_id"), col("cluster"), col("profit"))
       .agg(
         coalesce(countDistinct(col("order_id")), lit(0L)).as("order_frequency"),
         coalesce(sum(col("quantity")), lit(0.0)).as("total_quantity"))
+      .cache()
 
   /** A6: per-cluster stats with exact median. */
-  def clusterStats(): DataFrame =
+  def clusterStats(): DataFrame = served(statsPage)
+
+  private lazy val statsPage: DataFrame =
     clusters.groupBy(col("cluster")).agg(
       count(lit(1)).as("n_products"),
       round(avg(col("profit")), 2).as("avg_profit"),
       round(median(col("profit")), 2).as("median_profit"),
       round(sum(col("profit")), 2).as("total_profit"),
       round(avg(col("profit_margin")), 4).as("avg_margin"))
+      .cache()
 
   /** A8: brand → product rollup of cluster membership. */
-  def brandRollup(): DataFrame =
+  def brandRollup(): DataFrame = served(rollupPage)
+
+  private lazy val rollupPage: DataFrame =
     clusters
       .join(broadcast(products), clusters("part_id") === products("product_id"))
       .rollup(col("brand_id"), col("cluster"))
       .agg(count(lit(1)).as("n"), round(sum(col("profit")), 2).as("profit"))
+      .cache()
 
   /** A10: brand × cluster contingency pivot. */
-  def clusterPivot(): DataFrame =
+  def clusterPivot(): DataFrame = served(pivotPage)
+
+  private lazy val pivotPage: DataFrame =
     clusters
       .join(broadcast(products), clusters("part_id") === products("product_id"))
       .groupBy(col("brand_id"))
       .pivot("cluster", 0 until ClusteringJob.K)
       .count()
       .na.fill(0)
+      .cache()
 
   /** P9/P10/O1-O6: filtered, searched, sorted, paginated product list —
     * one widget interaction of the product-details page.

@@ -1,6 +1,13 @@
 package graft
 
+import java.util.concurrent.CyclicBarrier
+
 import graft.pipelines.{AnalyticsService, ClusteringJob, EtlJob}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline invariants on sf0.001 (the golden-count style of
@@ -8,12 +15,29 @@ import org.apache.spark.sql.functions._
   */
 class PipelineSpec extends SparkSpec {
 
-  private lazy val wh = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    EtlJob.run(spark, sf("sf0.001"), dir)
-    ClusteringJob.run(spark, sf("sf0.001"), dir)
+  private def land(src: String, dir: String): String = {
+    EtlJob.run(spark, src, dir)
+    ClusteringJob.run(spark, src, dir)
     dir
   }
+
+  private def freshDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private lazy val wh = land(sf("sf0.001"), freshDir("graft_wh"))
+
+  /** The four parameterless pages, by name, as the dashboard calls them. */
+  private def pages(svc: AnalyticsService): Seq[(String, () => DataFrame)] = Seq(
+    "clusterSummary" -> (() => svc.clusterSummary()),
+    "clusterStats" -> (() => svc.clusterStats()),
+    "brandRollup" -> (() => svc.brandRollup()),
+    "clusterPivot" -> (() => svc.clusterPivot()))
+
+  /** Every node of an executed plan: through AQE's final plan and its
+    * query stages, and into subqueries.
+    */
+  private def planNodes(plan: SparkPlan): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p => p }
 
   test("fact preserves every covered lineitem and assigns a valid interval") {
     val fact = spark.read.parquet(s"$wh/FactSales")
@@ -92,19 +116,94 @@ class PipelineSpec extends SparkSpec {
 
   test("a used service still answers after EtlJob and ClusteringJob rewrite its warehouse") {
     val d = sf("sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh_rerun").toString
-    EtlJob.run(spark, d, dir)
-    ClusteringJob.run(spark, d, dir)
+    val dir = land(d, freshDir("graft_wh_rerun"))
     val svc = new AnalyticsService(spark, dir)
     def answers() = (
       svc.productSearch(None, None, "profit", asc = false, page = 0).collect().toSeq,
       svc.brandRollup().collect().map(_.toString).sorted.toSeq,
       svc.clusterPivot().collect().map(_.toString).sorted.toSeq)
     val before = answers()
-    EtlJob.run(spark, d, dir)
-    ClusteringJob.run(spark, d, dir)
+    land(d, dir)
     // same inputs, so the rewritten warehouse holds the same answers
     assert(answers() == before)
+    spark.catalog.clearCache()
+  }
+
+  test("memoized pages answer for the new warehouse after a rewrite from a different source") {
+    // The rule perfbench's warehouse check states: product_clustering
+    // holds one row per part sold since the recent-window cutoff. Read
+    // from the source tables, which no service cache serves. Every
+    // clustered part is in DimProduct (the parts that sold), so the
+    // matched rows of the brand pages number the same.
+    def soldRecently(src: String): Long =
+      Tables.lineitem(spark, src)
+        .join(Tables.orders(spark, src), col("l_orderkey") === col("o_orderkey"))
+        .filter(col("o_orderdate") >= lit("2000-01-01").cast("timestamp"))
+        .select(col("l_partkey")).distinct().count()
+    // what each page's collected rows say about how many parts it covers
+    def covered(svc: AnalyticsService): Seq[Long] = Seq(
+      svc.clusterSummary().collect().length.toLong,
+      svc.clusterStats().collect().map(_.getAs[Long]("n_products")).sum,
+      svc.brandRollup().collect().filter(r => !r.isNullAt(r.fieldIndex("cluster")))
+        .map(_.getAs[Long]("n")).sum,
+      svc.clusterPivot().collect()
+        .map(r => (0 until ClusteringJob.K).map(c => r.getAs[Long](c.toString)).sum).sum)
+    val (small, large) = (sf("sf0.001"), sf("sf0.01"))
+    val dir = land(small, freshDir("graft_wh_reland"))
+    val svc = new AnalyticsService(spark, dir)
+    val before = soldRecently(small)
+    assert(covered(svc) == Seq.fill(4)(before))
+    land(large, dir)
+    val after = soldRecently(large)
+    assert(after != before, "the two landings must differ in what the pages total")
+    assert(covered(svc) == Seq.fill(4)(after), "every page must answer for the re-landed warehouse")
+    spark.catalog.clearCache()
+  }
+
+  test("a repeat page load is one job over in-memory rows; lastUpdate still reads the ledger") {
+    val svc = new AnalyticsService(spark, wh)
+    for ((name, page) <- pages(svc)) {
+      page().collect()
+      val df = page()
+      val (_, jobs) = jobsOf(df.collect())
+      val nodes = planNodes(df.queryExecution.executedPlan)
+      assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$name must scan its cached rows")
+      val work = nodes.collect {
+        case p @ (_: Exchange | _: ReusedExchangeExec | _: FileSourceScanExec) => p.nodeName
+      }
+      assert(work.isEmpty, s"$name repeat load still plans $work")
+      assert(jobs <= 1, s"$name repeat load ran $jobs jobs")
+    }
+    val ledger = svc.lastUpdate()
+    ledger.collect()
+    assert(planNodes(ledger.queryExecution.executedPlan).exists {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == "PipelineLog")
+      case _ => false
+    }, "lastUpdate must read the ledger files on every call")
+    spark.catalog.clearCache()
+  }
+
+  test("two clients' concurrent first calls fill the page memos with single-client answers") {
+    val dir = land(sf("sf0.001"), freshDir("graft_wh_clients"))
+    def answers(svc: AnalyticsService): Seq[Seq[String]] =
+      pages(svc).map { case (_, page) => page().collect().map(_.toString).sorted.toSeq }
+    val single = answers(new AnalyticsService(spark, dir))
+    spark.catalog.clearCache() // the shared service below fills every memo itself
+    val svc = new AnalyticsService(spark, dir)
+    val barrier = new CyclicBarrier(2)
+    val results = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Seq[Seq[String]]]]()
+    val clients = (0 until 2).map { c =>
+      val t = new Thread(() => {
+        barrier.await()
+        results.put(c, try Right(answers(svc)) catch { case e: Throwable => Left(e) })
+      })
+      t.start(); t
+    }
+    clients.foreach(_.join())
+    for (c <- 0 until 2) results.get(c) match {
+      case Right(a) => assert(a == single, s"client $c answers differ from a single client's")
+      case Left(e) => fail(s"client $c failed", e)
+    }
     spark.catalog.clearCache()
   }
 

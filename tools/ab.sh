@@ -5,10 +5,14 @@
 # Usage: tools/ab.sh <parent-rev> <workload> <seed>...
 #   e.g. tools/ab.sh HEAD~1 dashboard 101 102 103 104 105 106 107 108 109 110
 #
-# The parent's committed files are exported (git archive) into a
-# temporary directory; the change side is the working tree this script
-# sits in. Each side runs tools/bench_ops.py in its own tree, which makes
-# the call `perfbench/run.py --workload <workload> --seed <seed>
+# Both sides run from exported trees under one temporary directory, so
+# they differ only in their source: the parent's committed files
+# (git archive) in $WORK/parent, and the working tree's tracked and
+# untracked files that git does not ignore, as they are on disk, in
+# $WORK/change (a tracked file deleted in the working tree is left out,
+# with a tar warning; nothing built or run before, such as .bench_build/,
+# comes along). Each side runs tools/bench_ops.py in its own tree, which
+# makes the call `perfbench/run.py --workload <workload> --seed <seed>
 # --seconds 15 --trace 0` makes and also prints each op's time, one
 # side after the other, the parent first on the 1st, 3rd, ... seed and
 # the change first on the others, so a host that speeds up or slows down
@@ -42,13 +46,14 @@ REV=$1 WORKLOAD=$2; shift 2
 ROOT=$(cd "$(dirname "$0")/.." && pwd)
 WORK=$(mktemp -d)
 trap 'rm -rf "$WORK"' EXIT
-mkdir -p "$WORK/parent"
+mkdir -p "$WORK/parent" "$WORK/change"
 git -C "$ROOT" archive "$REV" | tar -x -C "$WORK/parent"
+git -C "$ROOT" ls-files -z --cached --others --exclude-standard \
+  | tar -c -C "$ROOT" --null -T - --ignore-failed-read | tar -x -C "$WORK/change"
 
 run() {  # run <side> <seed>: appends "<side> <seed> <result json>" to the results
-  local side=$1 seed=$2 tree line out
+  local side=$1 seed=$2 tree="$WORK/$1" line out
   out="$WORK/$side-$seed.out"
-  tree=$([ "$side" = parent ] && echo "$WORK/parent" || echo "$ROOT")
   echo "ab: $side seed=$seed" >&2
   if (cd "$tree" && python3 "$ROOT/tools/bench_ops.py" "$WORKLOAD" "$seed" \
       > "$out" 2> "$WORK/$side-$seed.log") && line=$(grep -m1 '^{' "$out"); then
