@@ -24,14 +24,6 @@ object Det {
     */
   def dsum(c: Column): Column = sum(c.cast(Money)).cast(DoubleType)
 
-  /** dsum over only the rows matching `cond` (conditional aggregation —
-    * the single-pass replacement for the reference's double fact scan,
-    * see /root/reference/src/pipelines/clustering.py:92 vs :115).
-    * Oracle: CAST(SUM(CASE WHEN cond THEN CAST(x AS DECIMAL(38,6)) END) AS DOUBLE)
-    */
-  def dsumIf(cond: Column, c: Column): Column =
-    sum(when(cond, c.cast(Money))).cast(DoubleType)
-
   /** n / d with NULL on zero/NULL denominator (matches `n / NULLIF(d, 0)`). */
   def ratio(n: Column, d: Column): Column = n / when(d =!= lit(0), d)
 }

@@ -4,7 +4,7 @@ import graft.{Q, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Deduplication operators over `documents`: exact (hash groupBy),
   * MinHash+LSH banding, SimHash, and n-gram Jaccard. All hashing goes
@@ -264,8 +264,8 @@ object Dedup {
     * minimum, small-star re-points the smaller neighbors at it, and the
     * round count grows with the log of component size, not its
     * diameter — ≤7 rounds on TextDedupSpec's 24-node chain, strictly
-    * fewer than [[minLabelPropagation]] on the same graph (both
-    * pinned there), so million-node chains converge in tens of rounds.
+    * fewer than the min-label propagation control that spec runs on
+    * the same graph, so million-node chains converge in tens of rounds.
     *
     * Mechanics: edges stay canonical as (hi > lo) pairs. Each
     * half-round is one keyed min-agg plus one equi-join on the edge
@@ -345,52 +345,6 @@ object Dedup {
 
   private[graft] def connectedComponents(pairsDf: DataFrame): DataFrame =
     connectedComponentsWithRounds(pairsDf)._1
-
-  /** Min-label propagation — the previous q84 engine, kept ONLY as the
-    * round-count control [[connectedComponentsWithRounds]] is raced
-    * against in TextDedupSpec (rounds = graph diameter; the star
-    * algorithm must beat it strictly on the chain fixture). Each round
-    * is one equi-join + keyed min-agg; the driver collects one scalar
-    * per round: the decimal label-sum certificate (labels are monotone
-    * non-increasing, so an unchanged sum proves a global fixpoint, and
-    * decimal(38) can't overflow on large surrogate ids the way an
-    * int64 sum could).
-    */
-  private[graft] def minLabelPropagation(pairsDf: DataFrame): (DataFrame, Int) = {
-    val undirected = pairsDf.toDF("pa", "pb")
-    val edges = undirected
-      .union(undirected.select(col("pb"), col("pa")))
-      .toDF("src", "dst")
-      .cache()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    def certificate(df: DataFrame): BigDecimal =
-      Option(
-        df.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head().getDecimal(0))
-        .map(BigDecimal(_)).getOrElse(BigDecimal(0))
-    var cur = certificate(labels)
-    var converged = false
-    var rounds = 0
-    while (!converged && rounds < 30) {
-      val prop = edges
-        .join(labels, col("src") === col("node"))
-        .select(col("dst").as("node"), col("lbl"))
-      // localCheckpoint (eager), not cache: it TRUNCATES lineage, so the
-      // plan stays bounded no matter how many rounds run — with cache the
-      // logical plan grows by one join+agg per round and the driver pays
-      // ever-longer analysis (and eventually OOMs) on big graphs
-      val next = labels.union(prop)
-        .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint()
-      val nxt = certificate(next)
-      labels = next
-      converged = nxt == cur
-      cur = nxt
-      rounds += 1
-    }
-    require(converged, s"label propagation did not converge in $rounds rounds")
-    (labels, rounds)
-  }
 
   /** Winnowing gram length / window (q141/q142): true per-window
     * winnowing (Schleimer/Wilkerson/Aiken) — every window of [[SpanW]]

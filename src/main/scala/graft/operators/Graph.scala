@@ -512,6 +512,17 @@ object Graph {
   private[graft] val CoreK = 3
   private[graft] val PeelRounds = 5
 
+  /** Undirected (u < v) co-purchase edge list — shared by the k-core
+    * forms and the spec's corpus-level convergence certificate.
+    */
+  private[graft] def undEdges(s: SparkSession, d: String): DataFrame =
+    coEdges(s, d)
+      .filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+
+  private[graft] def kcore(s: SparkSession, d: String): DataFrame =
+    kcoreOf(undEdges(s, d))
+
   /** [[PeelRounds]] rounds of [[CoreK]]-core peeling over the
     * undirected co-purchase graph: each round drops every node whose
     * degree IN THE SURVIVING subgraph is < k, then restricts the edge
@@ -525,17 +536,6 @@ object Graph {
     * degree aggregates + two semi-joins, edge-linear; O(log n) rounds
     * suffice in practice (the q84 large-star/small-star argument).
     */
-  /** Undirected (u < v) co-purchase edge list — shared by the k-core
-    * forms and the spec's corpus-level convergence certificate.
-    */
-  private[graft] def undEdges(s: SparkSession, d: String): DataFrame =
-    coEdges(s, d)
-      .filter(col("src") < col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
-
-  private[graft] def kcore(s: SparkSession, d: String): DataFrame =
-    kcoreOf(undEdges(s, d))
-
   private[graft] def kcoreOf(undRaw: DataFrame): DataFrame =
     graft.Parts.sized(undRaw) {
     var und = undRaw.localCheckpoint(true)
@@ -569,46 +569,6 @@ object Graph {
       .select(col("n").as("part_id"), col("core_deg"))
       .localCheckpoint(true)
     }.orderBy(col("part_id"))
-
-  /** Convergence-certificate form of [[kcoreOf]]: peel until the edge
-    * set stops shrinking, returning (per-node core degrees, number of
-    * peel rounds APPLIED before the fixpoint check passed). This is
-    * the TRUE k-core; the fixed-[[PeelRounds]] q157 form exists so the
-    * oracle is replayable CTE-for-CTE, and GraphSpec proves the two
-    * agree on the co-purchase corpus (plus a detector fixture where 5
-    * rounds provably are NOT enough, so non-convergence is visible in
-    * the round-5 output's sub-k degrees). Per-round driver sequencing
-    * (an eager checkpoint + a count) is inherent to any fixpoint loop
-    * — same cost class as the q84 connected-components rounds; rounds
-    * are O(log n) on real graphs (peeling cascades are shallow).
-    */
-  private[graft] def kcoreFixpointOf(undRaw: DataFrame): (DataFrame, Int) = {
-    var und = undRaw.localCheckpoint(true)
-    var nEdges = und.count()
-    var rounds = 0
-    var done = nEdges == 0
-    while (!done) {
-      val deg = und.select(col("u").as("n"))
-        .unionByName(und.select(col("v").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("dg"))
-      val kept = deg.filter(col("dg") >= CoreK).select(col("n"))
-      val next = und
-        .join(kept.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-        .join(kept.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(true)
-      val m = next.count()
-      rounds += 1
-      done = m == nEdges || m == 0
-      nEdges = m
-      und = next
-    }
-    val core = und.select(col("u").as("n")).unionByName(und.select(col("v").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("core_deg"))
-      .select(col("n").as("part_id"), col("core_deg"))
-      .orderBy(col("part_id"))
-    (core, rounds)
-  }
 
   /** Every per-round CTE is `AS MATERIALIZED`: each round references
     * the previous round's CTE multiple times (und twice in dg, kp
@@ -1276,11 +1236,10 @@ object Graph {
 
   /** One affected-closure expansion step: `aset` plus its neighbors
     * through `nonCoreEdges` — shared by the fixed-round expansion in
-    * [[kcoreDelta]] and its convergence certificate
-    * [[closureFixpointOf]], so the certificate provably iterates the
-    * SAME step it certifies.
+    * [[kcoreDelta]] and its convergence certificate in GraphSpec, so
+    * the certificate provably iterates the SAME step it certifies.
     */
-  private def closureStep(nonCoreEdges: DataFrame, aset: DataFrame): DataFrame = {
+  private[graft] def closureStep(nonCoreEdges: DataFrame, aset: DataFrame): DataFrame = {
     val nbrs = nonCoreEdges
       .join(aset.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
       .select(col("v").as("n"))
@@ -1288,35 +1247,6 @@ object Graph {
         .join(aset.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
         .select(col("u").as("n")))
     aset.unionByName(nbrs).distinct()
-  }
-
-  /** Convergence-certificate twin of the fixed-[[ClosureRounds]]
-    * affected-closure expansion in [[kcoreDelta]], mirroring
-    * [[kcoreFixpointOf]]/[[ccFixpointOf]]: expand until the affected
-    * set stops growing, returning (saturated set, rounds APPLIED
-    * before the fixpoint check passed). This matters because the q169
-    * oracle re-peels the merged graph from scratch instead of
-    * replaying the closure — an unsaturated closure at some SF would
-    * be a SILENT parity divergence with no output-visible detector, so
-    * GraphSpec asserts the graded buckets saturate within
-    * ClosureRounds (and a hand-built chain fixture proves the
-    * certificate detects the opposite).
-    */
-  private[graft] def closureFixpointOf(
-      nonCoreEdges: DataFrame, seed: DataFrame): (DataFrame, Int) = {
-    var aset = seed.localCheckpoint(true)
-    var n = aset.count()
-    var rounds = 0
-    var done = false
-    while (!done) {
-      val next = closureStep(nonCoreEdges, aset).localCheckpoint(true)
-      val m = next.count()
-      rounds += 1
-      done = m == n
-      n = m
-      aset = next
-    }
-    (aset, rounds)
   }
 
   /** The shared q169 input construction: from (base undirected edges,
@@ -1363,9 +1293,8 @@ object Graph {
 
   /** The q169 closure INPUTS (non-core edge channel + delta-endpoint
     * seed) for a dataset — via [[closureInputFrames]], the SAME
-    * construction [[kcoreDelta]] expands over, so the GraphSpec
-    * convergence certificate drives [[closureFixpointOf]] on the
-    * graded graph itself.
+    * construction [[kcoreDelta]] expands over, so GraphSpec's closure
+    * convergence certificate runs on the graded graph itself.
     */
   private[graft] def closureInputsOf(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val (edDir, coDir) = baseCoreIndex(s, d)
@@ -1511,9 +1440,9 @@ object Graph {
     * lbl ← lbl[lbl] (reach ×2), so [[CcRounds]] = 5 rounds certify
     * components of diameter ≥ 2⁵ — far past a co-purchase graph's
     * (dense, hub-heavy, shallow). The fixed count keeps the oracle
-    * replayable CTE-for-CTE; [[ccFixpointOf]] is the convergence-
-    * certificate form (GraphSpec proves the two agree on the corpus,
-    * and pins a long-path fixture where insufficient rounds are
+    * replayable CTE-for-CTE; GraphSpec holds the convergence-
+    * certificate form (it proves the two agree on the corpus, and
+    * pins a long-path fixture where insufficient rounds are
     * DETECTABLE from the output alone: an edge whose endpoints carry
     * different labels).
     */
@@ -1588,44 +1517,6 @@ object Graph {
     // eager final checkpoint — see [[pagerankOf]]'s sizing-window note
     lbl.localCheckpoint(true)
     }
-
-  /** Convergence-certificate form of [[ccLabels]]: iterate until no
-    * label changes, returning (labels, rounds applied). Per-round
-    * driver sequencing (an eager checkpoint + a count) is inherent to
-    * any fixpoint loop — the q84 cost class; pointer jumping makes
-    * rounds O(log diameter).
-    */
-  private[graft] def ccFixpointOf(nodes: DataFrame, undRaw: DataFrame): (DataFrame, Int) = {
-    val adj = undRaw.select(col("u").as("a"), col("v").as("b"))
-      .unionByName(undRaw.select(col("v").as("a"), col("u").as("b")))
-      .repartition(col("b")).cache()
-    var lbl = nodes.select(col("part_id"), col("part_id").as("lbl"))
-      .localCheckpoint(true)
-    var rounds = 0
-    var done = false
-    while (!done) {
-      val nbrMin = adj
-        .join(lbl.select(col("part_id").as("b"), col("lbl").as("lb")), Seq("b"))
-        .groupBy(col("a")).agg(min(col("lb")).as("nm"))
-      val m = lbl
-        .join(nbrMin.withColumnRenamed("a", "part_id"), Seq("part_id"), "left")
-        .select(col("part_id"),
-          least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
-      val next = m
-        .join(m.select(col("part_id").as("lbl"), col("lbl").as("l2")), Seq("lbl"))
-        .select(col("part_id"), col("l2").as("lbl"))
-        .localCheckpoint(true)
-      val changed = next.as("n")
-        .join(lbl.as("o"), col("n.part_id") === col("o.part_id"))
-        .filter(col("n.lbl") =!= col("o.lbl")).count()
-      rounds += 1
-      done = changed == 0
-      lbl = next
-    }
-    adj.unpersist(false)
-    (lbl, rounds)
-  }
 
   /** Per-round CTEs materialized: each nm/l round is referenced twice
     * (the jump self-joins nm; the next round reads l twice) — the

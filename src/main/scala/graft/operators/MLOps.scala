@@ -2337,8 +2337,8 @@ object MLOps {
     // page row carrying its sales panel (order frequency + total
     // quantity from FactSales). Every stage's output feeds the next
     // through parquet on disk, so the COMPOSED pipeline — not just
-    // its stages — sits under the oracle hash (GoldenEtlSpec pins
-    // counts; this pins values). The warehouse builds once per dataset,
+    // its stages — sits under the oracle hash (PipelineSpec pins
+    // EtlJob's fact coverage and dim keys; this pins values). The warehouse builds once per dataset,
     // through IndexStore ([[e2eWarehouse]], in Prebuild): first run
     // pays the ETL+clustering lifecycle, timed runs measure the DSS
     // serving path — the q159 index lifecycle applied to the whole

@@ -288,10 +288,9 @@ object Snapshots {
     val carriedStats = prevLines.filter(_.startsWith(StatsPrefix))
     // 3. atomic publish: temp write, fsync, rename into place (schema
     //    header first so even a zero-file version stays readable)
-    val op = if (replace || prev.isEmpty) "replace" else "append"
     val fullMeta = carriedMeta(spark, tableDir, prev, meta) ++ meta
     val header = (SchemaPrefix + committed.json) +:
-      (fullMeta + ("_op" -> op)).toSeq.sorted.map { case (k, mv) => s"$MetaPrefix$k=$mv" }
+      fullMeta.toSeq.sorted.map { case (k, mv) => s"$MetaPrefix$k=$mv" }
     publish(f, manifestPath(table, v), header ++ carriedStats ++ statLines ++ files, "commit")
     v
   }
@@ -551,28 +550,6 @@ object Snapshots {
     }
   }
 
-  /** DESCRIBE HISTORY — one row per committed version: the operation
-    * that produced it (append / replace / merge / delete; rollback
-    * rows carry the RESTORED version's op because rollback copies its
-    * manifest verbatim, metadata included; pre-op manifests show ""),
-    * file count, total bytes (shared files counted in every version
-    * that references them — this is the version's READ footprint, not
-    * incremental storage), and the user metadata. Driver-side manifest
-    * reads only — metadata-scale, like every other verb here.
-    */
-  def history(spark: SparkSession, tableDir: String): DataFrame = {
-    val table = new Path(tableDir)
-    val f = fs(spark, table)
-    val rows = versions(spark, tableDir).map { v =>
-      val files = fileLines(readManifest(spark, table, v))
-      val bytes = files.map(rel => f.getFileStatus(new Path(table, rel)).getLen).sum
-      val m = meta(spark, tableDir, v)
-      (v, m.getOrElse("_op", ""), files.size, bytes,
-        (m - "_op").toSeq.sorted.map { case (k, x) => s"$k=$x" }.mkString(","))
-    }
-    spark.createDataFrame(rows).toDF("version", "op", "n_files", "bytes", "meta")
-  }
-
   /** Restore version `v` as a NEW commit (history preserved — rollback
     * never deletes). Returns the new version number.
     */
@@ -771,7 +748,7 @@ object Snapshots {
       .map(p => s"$DataDir/$batch/${p.getName}")
       .sorted
     val header = (SchemaPrefix + schema.json) +:
-      (carriedMeta(spark, tableDir, prev, Map.empty) + ("_op" -> op))
+      carriedMeta(spark, tableDir, prev, Map.empty)
         .toSeq.sorted.map { case (k, mv) => s"$MetaPrefix$k=$mv" }
     // zone maps of UNTOUCHED files stay valid — carry them; the
     // rewritten files get none (fallback = always read, never wrong)

@@ -51,8 +51,8 @@ object Warehouse {
     val delete = col("i_key").isNull
     // null-safe: a NULL-vs-value restatement IS a change (plain =!=
     // returns NULL there and would silently fall through to the
-    // unchanged branch — the same pandas-NaN trap as the history
-    // merge's composite key, see CompanyXEtl)
+    // unchanged branch — the same pandas-NaN trap as the reference
+    // ETL's price-history merge on its composite key)
     val changed = !(col("new_bal") <=> col("bal"))
     def v(
         b: org.apache.spark.sql.Column,
@@ -359,14 +359,11 @@ object Warehouse {
     }
   }
 
-  /** q114's PRODUCTION surface: the sketch-only column profile — one
-    * unamplified lineitem scan, every distinct estimated by a
-    * fixed-size mergeable HLL (no Expand). The registered q114 wraps
-    * this shape in the bounded-error certificate (exact arms +
-    * within-5% booleans) so the driver can hash-gate it; PlanSpec pins
-    * THIS method's plan, which is what a 100 TB profile job runs.
+  /** The 1-row sketch aggregate over lineitem: the row count, and per
+    * column a non-null count, an HLL distinct estimate (rsd 2%) and
+    * min/max. [[approxProfileSketch]] and q114 both run this one plan.
     */
-  private[graft] def approxProfileSketch(
+  private def profileSketchAgg(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     def decS(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)").cast("string")
     Tables.lineitem(s, d)
@@ -388,6 +385,18 @@ object Warehouse {
         approx_count_distinct(col("l_shipdate"), 0.02).as("nd_s"),
         date_format(min(col("l_shipdate")), "yyyy-MM-dd").as("min_s"),
         date_format(max(col("l_shipdate")), "yyyy-MM-dd").as("max_s"))
+  }
+
+  /** q114's PRODUCTION surface: the sketch-only column profile — one
+    * unamplified lineitem scan, every distinct estimated by a
+    * fixed-size mergeable HLL (no Expand). The registered q114 wraps
+    * this shape in the bounded-error certificate (exact arms +
+    * within-5% booleans) so the driver can hash-gate it; PlanSpec pins
+    * THIS method's plan, which is what a 100 TB profile job runs.
+    */
+  private[graft] def approxProfileSketch(
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    profileSketchAgg(s, d)
       .select(inline(array(
         struct(lit("l_discount").as("col_name"), (col("n_rows") - col("nn_d")).as("n_null"),
           col("nd_d").as("n_distinct"), col("min_d").as("min_v"), col("max_d").as("max_v")),
@@ -602,35 +611,15 @@ object Warehouse {
     Q(
       "q114_approx_profile",
       (s, d) => {
-        def decS(c: org.apache.spark.sql.Column) = c.cast("decimal(18,2)").cast("string")
         def ok(appr: String, exact: String) =
           abs(col(appr) - col(exact)) * 100 <= col(exact) * 5
         // TWO single-purpose scans joined on their 1-row results: the
-        // sketch arm (plain hash agg, no Expand — the production plan,
-        // [[approxProfileSketch]]) and the exact arm (the q106
-        // multi-distinct Expand). Mixing countDistinct with HLL
+        // sketch arm ([[profileSketchAgg]], the plain hash agg with no
+        // Expand that [[approxProfileSketch]] runs) and the exact arm
+        // (the q106 multi-distinct Expand). Mixing countDistinct with HLL
         // sketches in ONE aggregate forces the sketch updates through
         // the 5× Expand amplification under a non-codegen aggregate —
         // measured 90× slower than the two scans separately.
-        val sketchArm = Tables.lineitem(s, d)
-          .agg(
-            count(lit(1)).as("n_rows"),
-            count(col("l_quantity")).as("nn_q"),
-            approx_count_distinct(col("l_quantity"), 0.02).as("nd_q"),
-            decS(min(col("l_quantity"))).as("min_q"), decS(max(col("l_quantity"))).as("max_q"),
-            count(col("l_extendedprice")).as("nn_p"),
-            approx_count_distinct(col("l_extendedprice"), 0.02).as("nd_p"),
-            decS(min(col("l_extendedprice"))).as("min_p"), decS(max(col("l_extendedprice"))).as("max_p"),
-            count(col("l_discount")).as("nn_d"),
-            approx_count_distinct(col("l_discount"), 0.02).as("nd_d"),
-            decS(min(col("l_discount"))).as("min_d"), decS(max(col("l_discount"))).as("max_d"),
-            count(col("l_returnflag")).as("nn_f"),
-            approx_count_distinct(col("l_returnflag"), 0.02).as("nd_f"),
-            min(col("l_returnflag")).as("min_f"), max(col("l_returnflag")).as("max_f"),
-            count(col("l_shipdate")).as("nn_s"),
-            approx_count_distinct(col("l_shipdate"), 0.02).as("nd_s"),
-            date_format(min(col("l_shipdate")), "yyyy-MM-dd").as("min_s"),
-            date_format(max(col("l_shipdate")), "yyyy-MM-dd").as("max_s"))
         val exactArm = Tables.lineitem(s, d)
           .agg(
             countDistinct(col("l_quantity")).as("xd_q"),
@@ -638,7 +627,7 @@ object Warehouse {
             countDistinct(col("l_discount")).as("xd_d"),
             countDistinct(col("l_returnflag")).as("xd_f"),
             countDistinct(col("l_shipdate")).as("xd_s"))
-        sketchArm.crossJoin(exactArm)
+        profileSketchAgg(s, d).crossJoin(exactArm)
           .select(inline(array(
             struct(lit("l_discount").as("col_name"), (col("n_rows") - col("nn_d")).as("n_null"),
               col("xd_d").as("n_distinct"), ok("nd_d", "xd_d").as("approx_ok"),

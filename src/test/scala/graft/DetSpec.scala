@@ -25,9 +25,4 @@ class DetSpec extends SparkSpec {
     assert(out(0).isNullAt(0))
     assert(out(1).getDouble(0) == 2.0)
   }
-
-  test("dsumIf only accumulates matching rows") {
-    val df = Seq((true, 1.5), (false, 100.0), (true, 2.5)).toDF("c", "x")
-    assert(df.agg(Det.dsumIf(col("c"), col("x"))).head().getDouble(0) == 4.0)
-  }
 }

@@ -319,11 +319,10 @@ class PlanSpec extends SparkSpec {
       s"join keys must be (blk, band):\n$p")
   }
 
-  /** The global-window waivers (q07/q31/q94 and the CompanyXEtl
-    * surrogate-id sites they pin): a single-partition Window is only
-    * acceptable over a provably tiny frame, so the window's subtree
-    * must pass through a row-shrinking operator (aggregate or limit)
-    * BEFORE reaching any file scan. A future edit that slides a
+  /** The global-window waivers (q07/q31/q94): a single-partition
+    * Window is only acceptable over a provably tiny frame, so the
+    * window's subtree must pass through a row-shrinking operator
+    * (aggregate or limit) BEFORE reaching any file scan. A future edit that slides a
     * fact-sized frame under one of these windows fails here.
     */
   private def assertGlobalWindowPostShrink(name: String): Unit = {

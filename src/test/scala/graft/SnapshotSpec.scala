@@ -345,33 +345,6 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotSink.lastBatchId(spark, dir).contains(0L))
   }
 
-  test("history describes every version: op, file count, read footprint, metadata") {
-    val dir = newTable()
-    Snapshots.commit((1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "tag"), dir)
-    Snapshots.commit(
-      (51 to 60).map(i => (i.toLong, s"v$i")).toDF("id", "tag"), dir,
-      meta = Map("source" -> "etl"))
-    Snapshots.merge(Seq((5L, "UP")).toDF("id", "tag"), dir, Seq("id"))
-    Snapshots.delete(Seq(Tuple1(6L)).toDF("id"), dir, Seq("id"))
-    Snapshots.rollback(spark, dir, 2)
-    val h = Snapshots.history(spark, dir).orderBy(col("version")).collect()
-      .map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getLong(3), r.getString(4)))
-    assert(h.map(_._1).toSeq == Seq(1, 2, 3, 4, 5))
-    assert(h.map(_._2).toSeq == Seq("replace", "append", "merge", "delete", "append"),
-      s"ops wrong: ${h.toSeq}") // rollback carries the restored version's op
-    assert(h(1)._5 == "source=etl", "user metadata must surface")
-    // footprints: every row's bytes equals the sum of its listed files
-    h.foreach { case (v, _, nFiles, bytes, _) =>
-      val files = Snapshots.files(spark, dir, Some(v))
-      assert(files.size == nFiles)
-      val fsys = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(files.map(p => fsys.getFileStatus(p).getLen).sum == bytes)
-    }
-    // append grows the footprint; the rollback row equals version 2's
-    assert(h(1)._4 > h(0)._4 && h(4)._4 == h(1)._4)
-  }
-
   test("merge refuses duplicate update keys and mismatched columns") {
     val dir = newTable()
     Snapshots.commit(Seq((1L, "a")).toDF("id", "tag"), dir)

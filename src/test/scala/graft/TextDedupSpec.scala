@@ -1,7 +1,9 @@
 package graft
 
 import graft.functions.TextFns
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Property checks for the portable-hash dedup primitives on crafted
   * near-duplicate documents (the driver's synthetic corpus has no true
@@ -105,6 +107,52 @@ class TextDedupSpec extends SparkSpec {
     assert(labels.size == 13)
   }
 
+  /** Min-label propagation — the previous q84 engine, kept ONLY as the
+    * round-count control `Dedup.connectedComponentsWithRounds` is raced
+    * against below (rounds = graph diameter; the star algorithm must
+    * beat it strictly on the chain fixture). Each round is one
+    * equi-join + keyed min-agg; the driver collects one scalar per
+    * round: the decimal label-sum certificate (labels are monotone
+    * non-increasing, so an unchanged sum proves a global fixpoint, and
+    * decimal(38) can't overflow on large surrogate ids the way an
+    * int64 sum could).
+    */
+  private def minLabelPropagation(pairsDf: DataFrame): (DataFrame, Int) = {
+    val undirected = pairsDf.toDF("pa", "pb")
+    val edges = undirected
+      .union(undirected.select(col("pb"), col("pa")))
+      .toDF("src", "dst")
+      .cache()
+    var labels = edges.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node"))
+    def certificate(df: DataFrame): BigDecimal =
+      Option(
+        df.agg(sum(col("lbl").cast(DecimalType(38, 0)))).head().getDecimal(0))
+        .map(BigDecimal(_)).getOrElse(BigDecimal(0))
+    var cur = certificate(labels)
+    var converged = false
+    var rounds = 0
+    while (!converged && rounds < 30) {
+      val prop = edges
+        .join(labels, col("src") === col("node"))
+        .select(col("dst").as("node"), col("lbl"))
+      // localCheckpoint (eager), not cache: it TRUNCATES lineage, so the
+      // plan stays bounded no matter how many rounds run — with cache the
+      // logical plan grows by one join+agg per round and the driver pays
+      // ever-longer analysis (and eventually OOMs) on big graphs
+      val next = labels.union(prop)
+        .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
+        .localCheckpoint()
+      val nxt = certificate(next)
+      labels = next
+      converged = nxt == cur
+      cur = nxt
+      rounds += 1
+    }
+    require(converged, s"label propagation did not converge in $rounds rounds")
+    (labels, rounds)
+  }
+
   test("star contraction beats min-label propagation on a chain, answers identically") {
     // a length-24 chain is the adversarial dup topology (templated web
     // text): diameter 23, so propagation pays ~one round per hop while
@@ -113,7 +161,7 @@ class TextDedupSpec extends SparkSpec {
     val (starLabels, starRounds) = operators.Dedup.connectedComponentsWithRounds(pairs)
     val star = starLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (100L to 123L).foreach(n => assert(star(n) == 100L, s"chain node $n"))
-    val (propLabels, propRounds) = operators.Dedup.minLabelPropagation(pairs)
+    val (propLabels, propRounds) = minLabelPropagation(pairs)
     val prop = propLabels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == prop, "both algorithms must produce identical components")
     assert(starRounds < propRounds,
